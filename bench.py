@@ -973,7 +973,6 @@ def _crawl_throughput_evlogged(
             # engine defaults: adaptive wave path (tiny waves take the
             # single-partition shortcut, real waves the distributed one —
             # both oracle-verified; the bench measures the production config)
-            concurrent_sinks=os.environ.get("BENCH_CRAWL_CONC_SINKS") == "1",
         )
         stride = max(1, n_docs // n_seeds)
         seeds = [

@@ -78,6 +78,10 @@ def build_bloom(df: DataFrame, xx_col: str, m_bits: int = 1 << 23, k: int = 4) -
     pass. Dense partitions keep the fixed-size bitmap partial ('bm'), which
     is what bounds driver traffic at scale. Same resulting bitmap bit for
     bit either way. Returns the bitmap (m_bits/8 bytes)."""
+    if m_bits > 1 << 32:
+        # sparse partials ship positions as uint32: a wider filter would wrap
+        # them silently into false negatives of the seen prefilter
+        raise ValueError(f"bloom m_bits={m_bits} exceeds 2**32 (positions are uint32)")
     nbytes = m_bits // 8
 
     def partial(it):

@@ -1,32 +1,39 @@
 """The crawl engine: iterative BFS / priority-frontier epochs as DataFrame plans.
 
-Two modes, both checkpoint-resumable, both oracle-verified (oracle_sim.py):
+One checkpoint-resumable epoch loop (CrawlEngine._run) drives both modes;
+both are oracle-verified against oracle_sim.py. Every epoch runs the same
+steps, each labelled `epoch N: <step>` on the Spark jobs it issues:
 
-run_bfs — exact ordering-equality mode. Reproduces the reference BFS loop
-(services/crawl_service.py:487-601) wave-by-wave:
+  control-file check --wave selection (per mode)--> ranked wave
+  --left join docs (the 'fetch'; deterministic status)--> seen write
+  --Arrow-batched link extraction--> per-page edge dedup --> edges write
+  --child admission (per mode)--> frontier write --> metrics (overlapped)
+  + prefilter fold --> commit --> next frontier
 
-  frontier(d) --dedup within wave + bloom-prefiltered anti-join vs seen-->
-  eligible --dense rank (order.with_global_index) + max_pages cut-->
-  crawled wave --left join docs (the 'fetch'; deterministic status)-->
-  --Arrow-batched link extraction--> outlinks --admission filters +
-  (boundary-wave-only) sequential budget scan--> frontier(d+1)
+A mode contributes only its wave selection and its child admission:
 
-Per-wave the ONLY driver-side sequential work is the max_pages admission scan
-(reference check `crawled + qsize < max_pages`, crawl_service.py:599-600),
-and it runs only on the single wave where the budget can bind — every other
-wave takes the all-admitted fast path (an upper bound on crawled+qsize is
-checked first). Everything else is distributed: the dense ordering index uses
-range-partition + per-partition offsets (no global window), the seen anti-join
-is hash-partitioned with a Bloom sidecar prefilter, skew from hot hosts rides
-on AQE skew-join handling.
+run_bfs (_Bfs) — exact ordering-equality mode. Reproduces the reference BFS
+loop (services/crawl_service.py:487-601) wave-by-wave. Wave: first
+occurrence within the wave (min_by hash aggregate) + Bloom-prefiltered
+anti-join vs seen, dense rank (order.with_global_index) and the max_pages
+cut. Admission: anti-join vs seen, not crawled earlier in this wave, dense
+rank in (parent, link position) order, and — only on the single wave where
+the budget can bind — the sequential `crawled + qsize < max_pages` budget
+scan (crawl_service.py:599-600), rendered distributed (an upper bound on
+crawled+qsize is checked first; every other wave admits everything).
 
-run_scheduler — priority-frontier mode (the north_rule scheduler):
-per-host FIFO-within-priority ranks (windowed rank over host-partitioned
-frontier, smart_crawler_queue.py:81-103), per-epoch politeness budgets
-min(host_budget, floor(epoch_seconds/crawl_delay)) (logical-time rendering of
-the can_crawl_now gate :76-79), global wave order (priority, host, rank)
-(:163), robots disallow filtering at admission (robots_parser.py semantics),
-retry demotion + dead-letter (:182-192).
+run_scheduler (_Scheduler) — priority-frontier mode (the north_rule
+scheduler). Wave: circuit breaker, per-host FIFO-within-priority ranks under
+per-epoch politeness budgets min(host_budget, floor(epoch_seconds/
+crawl_delay)) (salted per_host_topk; smart_crawler_queue.py:76-103), global
+wave order (priority, host, rank) (:163) and the max_pages overflow.
+Admission: inbound-link count, robots disallow + domain filters
+(robots_parser.py semantics), anti-join vs the `enqueued` set, W4 priority,
+retry demotion + dead-letter (:182-192), unioned with the leftover frontier.
+
+The seen anti-join is hash-partitioned with a Bloom/cuckoo prefilter, the
+dense ordering index uses range-partition + per-partition offsets (no global
+window), and skew from hot hosts rides on AQE skew-join handling.
 """
 
 from __future__ import annotations
@@ -34,6 +41,7 @@ from __future__ import annotations
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -52,16 +60,32 @@ from .frontier import per_host_topk
 from .order import track_persist, unpersist_all, with_global_index
 
 _FRONTIER_COLS = ["url", "url_hash", "xx64", "host", "depth", "wave_seq"]
+_SCHED_COLS = ["url", "url_hash", "xx64", "host", "depth", "priority", "retries", "arrival_seq"]
+_LINK_FIELDS = ("anchor_text", "rel", "link_type", "context_text", "pos", "from_tag", "first")
+
+# Waves below this row count use single-partition ordering + writes (1 job
+# instead of 3; identical semantics — see order.with_global_index). Crossover
+# measured on local[32]: the serial window loses above a few thousand rows
+# (a 100k threshold cost 1.7x end-to-end), so it covers only genuinely tiny
+# waves (seed ramps, tails).
+SMALL_WAVE_ROWS = 2_000
+# Largest wave the in-memory fetch join broadcasts (see _fetch_join).
+BROADCAST_WAVE_MAX = 2_000_000
 
 
-def _submit(pool, fn, *args, **kw):
-    """Dispatch an independent sink write to the epoch's thread pool (Spark
-    job submission is thread-safe; concurrently-submitted jobs share the
-    executor slots), or run it inline when concurrency is off."""
-    if pool is None:
-        fn(*args, **kw)
-        return None
-    return pool.submit(fn, *args, **kw)
+def _first_occurrence(df: DataFrame, key: str, order: F.Column) -> DataFrame:
+    """One row per `key`: the row with the least `order`, which must be
+    unique per row (so ties are impossible and the pick is deterministic).
+    A min_by HASH aggregation, not a ranking window: the partial (map-side)
+    combine collapses duplicates before the exchange and no per-partition
+    sort runs."""
+    other = [c for c in df.columns if c != key]
+    return (
+        df.groupBy(key)
+        .agg(F.min_by(F.struct(*other), order).alias("_r"))
+        .select(key, *[F.col(f"_r.{c}").alias(c) for c in other])
+        .select(*df.columns)
+    )
 
 
 @dataclass
@@ -82,6 +106,19 @@ class CrawlStats:
     crawled_at_resume: int = 0  # pages already crawled at that checkpoint
 
 
+@dataclass
+class _Epoch:
+    """What a mode's wave selection and child admission read of one epoch."""
+
+    n: int  # this epoch's number
+    crawled: int  # pages crawled before it
+    n_front: int  # rows of the frontier it starts from
+    small: bool  # n_front < SMALL_WAVE_ROWS
+    seen: DataFrame | None  # pages crawled through the previous epoch
+    bloom: np.ndarray | None  # single-bitmap prefilter, if that layout is on
+    n_crawl: int = 0  # pages this epoch crawls (set after wave selection)
+
+
 class CrawlEngine:
     def __init__(
         self,
@@ -96,15 +133,12 @@ class CrawlEngine:
         bloom_layout: str = "single",
         bloom_buckets: int = 64,
         canonical_mode: str = "identity",
-        small_wave_threshold: int = 2_000,
         compact_every: int = 0,
         seen_layout: str = "delta",
         metrics_enabled: bool = True,
-        broadcast_wave_max: int = 2_000_000,
         corpus_broadcast_ratio: int = 50,
         docs_layout: str = "inmem",
         docs_buckets: int = 32,
-        concurrent_sinks: bool = False,
     ):
         self.spark = spark
         self.cfg = cfg
@@ -130,18 +164,13 @@ class CrawlEngine:
         per_bucket = max(4096, bloom_bits // 8 // max(bloom_buckets, 1))
         self._cuckoo_slots = 1 << (per_bucket.bit_length() - 1)
         self.canonical_mode = canonical_mode
-        # waves below this row count use single-partition ordering + writes
-        # (1 job instead of 3; identical semantics — see order.with_global_index).
-        # Crossover measured on local[32]: the serial window loses above a few
-        # thousand rows (the old 100k default cost 1.7x end-to-end), so the
-        # threshold covers only genuinely tiny waves (seed ramps, tails).
-        self.small_wave_threshold = small_wave_threshold
         # fold seen/edges deltas every k epochs (0 = off); Iceberg snapshot
         # compaction equivalent — keeps the per-wave delta-union scan bounded
         self.compact_every = compact_every
         # 'delta' = union of epoch deltas (default); 'bucketed' = probe a
-        # bucketBy(url_hash) managed table so the anti-join never re-shuffles
-        # the accumulated side (sources/bucketed.py; the 10^10-scale layout)
+        # bucketBy(url_hash) managed table so the BFS anti-join never
+        # re-shuffles the accumulated side (sources/bucketed.py; the 10^10-
+        # scale layout). The scheduler dedups against `enqueued` instead.
         self.seen_layout = seen_layout
         self.metrics_enabled = metrics_enabled
         # Fetch-join strategy (driver-known cardinalities pick the plan):
@@ -150,27 +179,14 @@ class CrawlEngine:
         #     equivalent); per-epoch joins exchange only the wave — the
         #     10^10 layout, plan-locked in tests.
         #   docs_layout='inmem' (default): corpus is a caller-persisted
-        #     DataFrame. A wave <= broadcast_wave_max rows is broadcast
+        #     DataFrame. A wave <= BROADCAST_WAVE_MAX rows is broadcast
         #     against a streamed corpus scan when the corpus outnumbers the
         #     wave by corpus_broadcast_ratio (the regime where re-shuffling
         #     the corpus loses); comparable-size corpora (local bench: 3x
         #     the wave) measure FASTER under the plain shuffle join, so the
         #     ratio gate keeps that plan where it wins.
-        self.broadcast_wave_max = broadcast_wave_max
         self.corpus_broadcast_ratio = corpus_broadcast_ratio
         self.docs_layout = docs_layout
-        # True = overlap the epoch's independent sink writes (seen, edges)
-        # with the candidate pipeline via a 2-thread pool (Spark job
-        # submission is thread-safe; concurrently-submitted jobs share
-        # executor slots). Off by default: on a fully-packed local[32] the
-        # write job races the pipeline to FILL the shared fetched/links
-        # caches and can recompute the extraction lineage — a 3-round
-        # interleaved A/B at the 30k-page bench point measured +9-19%
-        # task-CPU in 2 of 3 rounds with no reliable wall win. Opt in on a
-        # real multi-executor cluster where the driver barrier between the
-        # sink write and the admission pipeline leaves executors idle (and
-        # prefer materializing the wave cache before enabling).
-        self.concurrent_sinks = concurrent_sinks
         self._n_docs: int | None = None
         self._docs_table = None
         if docs_layout == "bucketed":
@@ -182,10 +198,6 @@ class CrawlEngine:
                 buckets=docs_buckets,
                 key="doc_id",
             )
-        # step-wall profiling (CRAWL_PROF=1): {epoch: {step: seconds}}; the
-        # _step job descriptions are always set (negligible cost, driver-side)
-        self._prof: dict | None = {} if os.environ.get("CRAWL_PROF") else None
-        self._prof_last: tuple[str, float, int] | None = None
         self._bucketed = None
         if seen_layout == "bucketed":
             from ..sources.bucketed import BucketedSeenTable
@@ -287,7 +299,7 @@ class CrawlEngine:
         if self._n_docs is None:
             self._n_docs = docs.count()  # cached corpus: cheap, once per run
         if (
-            n_wave > self.broadcast_wave_max
+            n_wave > BROADCAST_WAVE_MAX
             or self._n_docs < self.corpus_broadcast_ratio * max(n_wave, 1)
         ):
             return (
@@ -461,7 +473,7 @@ class CrawlEngine:
 
         leftover = store.read_epoch(spark, "frontier", epoch)
         n_left = leftover.count()
-        small = n_left + 1 < self.small_wave_threshold
+        small = n_left + 1 < SMALL_WAVE_ROWS
         readd, n_new = with_global_index(keyed, ["url"], "wave_seq", small=small)
         readd = readd.withColumn("wave_seq", F.col("wave_seq") + F.lit(n_left))
         merged = leftover.select(*_FRONTIER_COLS).unionByName(
@@ -479,29 +491,17 @@ class CrawlEngine:
         return n_left + n_new
 
     def _step(self, epoch: int, label: str) -> None:
-        """Tag subsequent Spark jobs with the loop step that issued them, so
-        an event-log profiling run attributes wall time per step (and records
-        the previous step's wall in per-epoch stats when profiling is on)."""
-        now = time.monotonic()
-        if self._prof is not None:
-            # record the elapsed wall under the epoch that ISSUED the
-            # finished step (an epoch's closing step otherwise lands in the
-            # next epoch's bucket — the exact misattribution profiling is
-            # meant to rule out)
-            prev_label, prev_t, prev_epoch = self._prof_last or (None, now, epoch)
-            if prev_label is not None:
-                ep = self._prof.setdefault(prev_epoch, {})
-                ep[prev_label] = round(ep.get(prev_label, 0.0) + (now - prev_t), 3)
-            # 'end' closes a run — a later resumed run on the same engine
-            # must not book the inter-run idle wall into this run's profile
-            self._prof_last = None if label == "end" else (label, now, epoch)
+        """Tag the Spark jobs this thread issues next with the loop step that
+        issues them, so an event log attributes wall time per step."""
         self.spark.sparkContext.setJobDescription(f"epoch {epoch}: {label}")
 
     def _log_metrics(self, epoch: int, stages: list[tuple[str, DataFrame]]) -> None:
         """Per-partition lineage counters (north_rule): one write per epoch,
-        all stages unioned."""
+        all stages unioned. Runs on the metrics thread, which labels its own
+        jobs (job descriptions are per thread)."""
         if not self.metrics_enabled:
             return
+        self._step(epoch, "metrics")
         parts = []
         for stage, df in stages:
             parts.append(
@@ -518,31 +518,42 @@ class CrawlEngine:
         # must not append a second copy of the epoch's counters (ADVICE r01)
         self.store.write_epoch("metrics", epoch, m, coalesce=1)
 
-    # -- BFS mode ---------------------------------------------------------------
-
-    def _seed_frontier(self, seeds: list[str]) -> DataFrame:
-        rows = [(u, i) for i, u in enumerate(seeds)]
-        df = local_df(self.spark, rows, "url string, wave_seq long")
-        return self._with_keys(df).withColumn("depth", F.lit(0)).select(*_FRONTIER_COLS)
+    # -- the epoch loop -----------------------------------------------------------
 
     def run_bfs(self, seeds: list[str], resume: bool = False) -> dict:
-        from concurrent.futures import ThreadPoolExecutor
+        return self._run(_Bfs(self), seeds, resume)
 
-        pool = ThreadPoolExecutor(max_workers=2) if self.concurrent_sinks else None
-        # metrics always get their own 1-thread pool: the counters write only
-        # READS the already-filled fetched cache and the stored frontier file,
-        # so it safely rides next to the bloom fold regardless of whether the
-        # heavier seen/edges sink overlap (concurrent_sinks) is enabled —
-        # measured ~0.8 s/epoch of pure serial wall otherwise
-        mpool = ThreadPoolExecutor(max_workers=1)
-        try:
-            return self._run_bfs(seeds, resume, pool, mpool)
-        finally:
-            mpool.shutdown(wait=True)
-            if pool is not None:
-                pool.shutdown(wait=True)
+    def run_scheduler(
+        self,
+        seeds: list[str],
+        resume: bool = False,
+        max_epochs: int = 10_000,
+        collect_waves: bool = False,
+    ) -> dict:
+        out = self._run(_Scheduler(self), seeds, resume, max_epochs)
+        if collect_waves:
+            # oracle-equality diagnostics only: one driver collect at the END
+            # of the run, reconstructed from the epoch-stamped seen deltas.
+            # The hot loop itself never collects (at the 10^10 design point
+            # this opt-in is a test-scale tool, never production state).
+            rows = (
+                out["seen"]
+                .select("epoch", "crawl_order", "url", "depth")
+                .orderBy("crawl_order")
+                .collect()
+            )
+            by_epoch: dict[int, list[tuple[str, int]]] = {}
+            for r in rows:
+                by_epoch.setdefault(int(r["epoch"]), []).append((r["url"], int(r["depth"])))
+            out["waves"] = [
+                by_epoch.get(e["epoch"], []) for e in self.stats.per_epoch
+            ]
+        return out
 
-    def _run_bfs(self, seeds: list[str], resume: bool, pool, mpool=None) -> dict:
+    def _run(
+        self, mode: _Bfs | _Scheduler, seeds: list[str], resume: bool,
+        max_epochs: float = float("inf"),
+    ) -> dict:
         cfg, spark, store = self.cfg, self.spark, self.store
         t0 = time.monotonic()
 
@@ -552,134 +563,98 @@ class CrawlEngine:
             crawled = int(ckpt["crawled"])
             self.stats.resumed_from = epoch
             self.stats.crawled_at_resume = crawled
-            frontier = store.read_epoch(spark, "frontier", epoch)
+            self._step(epoch, "resume")
+            mode.resume(ckpt)
+            frontier = store.read_epoch(spark, mode.table, epoch)
             bloom = store.read_bloom(epoch) if self.use_bloom else None
         else:
             store.reset()  # a fresh run must not inherit prior generations
             epoch = 0
             crawled = 0
-            frontier = self._seed_frontier(seeds)
-            store.write_epoch("frontier", 0, frontier)
-            frontier = store.read_epoch(spark, "frontier", 0)
-            bloom = (
+            self._step(epoch, "seed")
+            store.write_epoch(mode.table, 0, mode.seed_frontier(seeds))
+            frontier = store.read_epoch(spark, mode.table, 0)
+            bloom = mode.seed_prefilter(
+                frontier,
                 np.zeros(self.bloom_bits // 8, dtype=np.uint8)
                 if self.use_bloom and self.bloom_layout == "single"
-                else None
+                else None,
             )
             if bloom is not None:
                 store.write_bloom(0, bloom)
-            store.commit({"epoch": 0, "crawled": 0, "mode": "bfs"})
+            store.commit({"epoch": 0, "crawled": 0, **mode.ckpt()})
 
-        if self._bucketed is not None:
-            self._bucketed.drop()
+        bucketed = self._bucketed if mode.probes_seen else None
+        if bucketed is not None:
+            bucketed.drop()
             if ckpt is not None:
                 prior = store.read_deltas(spark, "seen", epoch)
                 if prior is not None:
-                    self._bucketed.init(prior.select("url_hash"))
+                    bucketed.init(prior.select("url_hash"))
 
-        n_wave = frontier.count()  # subsequent waves reuse the admitted count
-        while crawled < cfg.max_pages:
-            if n_wave == 0:
-                break
-            ctl = store.read_control()  # pause/cancel (job_coordinator.py:282-369)
-            if ctl in ("paused", "cancelled"):
-                self.stats.stopped = ctl
-                break
-            epoch += 1
-            if self._bucketed is not None and self._bucketed.exists():
-                seen = self._bucketed.df()
-            else:
-                seen = store.read_deltas(spark, "seen", epoch - 1)
+        n_front = frontier.count()
+        # the metrics write only READS the already-filled fetched cache and
+        # the stored frontier file, so it rides next to the prefilter fold on
+        # its own thread — measured ~0.8 s/epoch of pure serial wall otherwise
+        with ThreadPoolExecutor(max_workers=1) as mpool:
+            while n_front and crawled < cfg.max_pages and epoch < max_epochs:
+                ctl = store.read_control()  # pause/cancel (job_coordinator.py:282-369)
+                if ctl in ("paused", "cancelled"):
+                    self.stats.stopped = ctl
+                    break
+                epoch += 1
+                self._step(epoch, "rank_wave")
+                if bucketed is not None and bucketed.exists():
+                    seen = bucketed.df()
+                else:
+                    seen = store.read_deltas(spark, "seen", epoch - 1)
+                ep = _Epoch(epoch, crawled, n_front, n_front < SMALL_WAVE_ROWS, seen, bloom)
+                coalesce = 1 if ep.small else None
+                wave = mode.select_wave(ep, frontier)
+                if wave is None:
+                    break
+                ranked, ep.n_crawl = wave
 
-            # dequeue-time skips: depth >= max_depth (crawl_service.py:499-501),
-            # seen (:497-498), first-occurrence within the wave (dup enqueues)
-            elig = frontier.filter(F.col("depth") < F.lit(cfg.max_depth))
-            # dedup on url_hash, not raw url: they are the same identity under
-            # canonical_mode='identity' (sha256 of the raw string), but under
-            # 'full' two raw spellings of one canonical URL must collapse here
-            # (scheduler mode already keys its dedup on url_hash).
-            # min_by over the dense-unique wave_seq (ties impossible: every
-            # frontier row carries a distinct index) picks the identical
-            # first-occurrence row as the former row_number window, but as a
-            # HASH aggregation: partial (map-side) combine collapses dup
-            # enqueues before the exchange and no per-partition sort runs
-            other = [c for c in elig.columns if c != "url_hash"]
-            elig = (
-                elig.groupBy("url_hash")
-                .agg(F.min_by(F.struct(*other), F.col("wave_seq")).alias("_r"))
-                .select("url_hash", *[F.col(f"_r.{c}").alias(c) for c in other])
-                .select(*elig.columns)
-            )
-            elig = self._not_seen(elig, seen, bloom)
-
-            small = n_wave < self.small_wave_threshold
-            self._step(epoch, "rank_wave")
-            # bucket_by: wave_seq is dense in [0, n_wave) by construction
-            # (seed/admission/indexing all emit dense indexes), so the global
-            # index needs no range-sampling pass over the filter lineage
-            ranked, n_elig = with_global_index(
-                elig, ["wave_seq"], "crawl_idx", small=small,
-                bucket_by=("wave_seq", n_wave),
-            )
-            cut = cfg.max_pages - crawled
-            n_crawled_wave = min(n_elig, cut)
-            if n_elig > cut:
-                ranked = ranked.filter(F.col("crawl_idx") < F.lit(cut))
-
-            fetched = self._fetch_join(
-                ranked.withColumn("crawl_order", F.col("crawl_idx") + F.lit(crawled)),
-                n_crawled_wave,
-            )
-            fetched.persist()
-
-            seen_delta = fetched.select(
-                "url_hash", "url", "xx64", "depth", "crawl_order", "status_code",
-                F.lit(epoch).alias("epoch"),
-            )
-            self._step(epoch, "fetch_join+seen_write")
-            # independent sink: overlaps with extraction + the candidate
-            # pipeline below (they share the fetched/links caches — Spark's
-            # per-block cache locks serialize any concurrent fill); joined
-            # before the metrics step
-            fut_seen = _submit(
-                pool, store.write_epoch, "seen", epoch, seen_delta,
-                coalesce=1 if small else None,
-            )
-
-            pages = self._pages_for_extraction(
-                fetched, ["url", "wave_seq", "crawl_idx", "depth", "spans"]
-            )
-            links = (
-                with_links(pages, doc_col="url")
-                .select(
-                    F.col("url").alias("src"),
-                    F.col("wave_seq").alias("parent_q"),
-                    F.col("crawl_idx").alias("parent_k"),
-                    "depth",
-                    F.explode("links").alias("l"),
+                fetched = self._fetch_join(
+                    ranked.withColumn("crawl_order", F.col("crawl_idx") + F.lit(crawled)),
+                    ep.n_crawl,
                 )
-                .select(
-                    "src", "parent_q", "parent_k", "depth",
-                    F.col("l.href").alias("dst"),
-                    F.col("l.anchor_text").alias("anchor_text"),
-                    F.col("l.rel").alias("rel"),
-                    F.col("l.link_type").alias("link_type"),
-                    F.col("l.context_text").alias("context_text"),
-                    F.col("l.pos").alias("pos"),
-                    F.col("l.from_tag").alias("from_tag"),
-                    F.col("l.first").alias("first"),
+                fetched.persist()
+                seen_delta = fetched.select(
+                    "url_hash", "url", "xx64", "depth", "crawl_order", "status_code",
+                    F.lit(epoch).alias("epoch"),
                 )
-            )
-            links.persist()
+                self._step(epoch, "fetch_join+seen_write")
+                store.write_epoch("seen", epoch, seen_delta, coalesce=coalesce)
 
-            # edges: (src,dst) dedup == within-page first occurrence, because a
-            # page is crawled exactly once (crawl_service.py:95-116 Redis pair
-            # set). The extraction UDF marks first occurrences per page
-            # (LINK.first), so this is a filter — no (src,dst) shuffle of the
-            # widest frame in the loop (anchor/context strings).
-            edges_new = (
-                links.filter(F.col("first"))
-                .select(
+                # each link carries its page's depth and the mode's parent columns
+                # (the page's wave position, renamed)
+                parents = list(mode.parents.values())
+                pages = self._pages_for_extraction(
+                    fetched, ["url", *mode.parents, "depth", "spans"]
+                )
+                links = (
+                    with_links(pages, doc_col="url")
+                    .select(
+                        F.col("url").alias("src"),
+                        *[F.col(c).alias(a) for c, a in mode.parents.items()],
+                        "depth",
+                        F.explode("links").alias("l"),
+                    )
+                    .select(
+                        "src", *parents, "depth",
+                        F.col("l.href").alias("dst"),
+                        *[F.col(f"l.{f}").alias(f) for f in _LINK_FIELDS],
+                    )
+                )
+                links.persist()
+
+                # edges: (src,dst) dedup == within-page first occurrence, because a
+                # page is crawled exactly once (crawl_service.py:95-116 Redis pair
+                # set). The extraction UDF marks first occurrences per page
+                # (LINK.first), so this is a filter — no (src,dst) shuffle of the
+                # widest frame in the loop (anchor/context strings).
+                edges_new = links.filter(F.col("first")).select(
                     "src", "dst",
                     url_host("src").alias("src_host"),
                     url_host("dst").alias("dst_host"),
@@ -687,111 +662,57 @@ class CrawlEngine:
                     *self._edge_analytics_cols(epoch),
                     F.lit(epoch).alias("epoch"),
                 )
-            )
-            self._step(epoch, "extract+edges_write")
-            fut_edges = _submit(
-                pool, store.write_epoch, "edges", epoch, edges_new,
-                coalesce=1 if small else None,
-            )
+                self._step(epoch, "extract+edges_write")
+                store.write_epoch("edges", epoch, edges_new, coalesce=coalesce)
 
-            # children admission (enqueue checks, crawl_service.py:595-601):
-            cand = links.filter(F.col("from_tag") == "a").select(
-                F.col("dst").alias("url"), "parent_q", "parent_k", "pos",
-                (F.col("depth") + 1).alias("depth"),
-            )
-            cand = self._with_keys(cand)
-            if cfg.allowed_domains:
-                cand = cand.filter(F.col("host").isin(*sorted(cfg.allowed_domains)))
-            cand = self._not_seen(cand, seen, bloom)
-            # not crawled earlier in THIS wave (seen set grows during the wave);
-            # keyed on url_hash for the same canonical-identity reason as above
-            cw = fetched.select(F.col("url_hash").alias("_cu"), F.col("crawl_idx").alias("_ck"))
-            cand = (
-                cand.join(cw, cand["url_hash"] == cw["_cu"], "left")
-                .filter(F.col("_ck").isNull() | (F.col("_ck") > F.col("parent_k")))
-                .drop("_cu", "_ck")
-            )
+                cand = links.filter(F.col("from_tag") == "a").select(
+                    F.col("dst").alias("url"), *parents, "pos",
+                    (F.col("depth") + 1).alias("depth"),
+                )
+                nxt, prefilter_keys = mode.admit(ep, fetched, cand)
 
-            self._step(epoch, "rank_candidates")
-            # keep_pid: budget admission below reuses this pass's partitioning
-            # + in-partition order, so it needs no re-shuffle of its own
-            nxt, n_cand = with_global_index(
-                cand, ["parent_q", "pos"], "wave_seq", small=small, keep_pid=True,
-                # parent_q (the parent's dense wave position) is the leading
-                # order column and lives in [0, n_wave)
-                bucket_by=("parent_q", n_wave),
-            )
-            self.stats.scheduled += n_cand
-
-            # max_pages admission budget (crawl_service.py:599-600). Fast path:
-            # upper bound of crawled+qsize over the whole wave can't reach the
-            # budget => everything admitted, no sequential work.
-            bound = crawled + n_crawled_wave + n_wave + n_cand
-            if bound >= cfg.max_pages:
-                self._step(epoch, "sequential_admission")
-                nxt = self._sequential_admission(nxt, crawled, n_wave)
-
-            nxt = nxt.select(*_FRONTIER_COLS)
-            self._step(epoch, "frontier_write")
-            store.write_epoch("frontier", epoch, nxt, coalesce=1 if small else None)
-            # metrics BEFORE the bucketed append: the metrics job re-evaluates
-            # plans whose lineage anti-joins the bucketed seen table; after the
-            # append, a cache eviction would recompute them against a table
-            # that already contains this wave's own rows
-            self._step(epoch, "metrics")
-            # join the overlapped sinks: their files must exist before the
-            # epoch commits (resume contract) and before unpersist releases
-            # the caches they scan
-            for fut in (fut_seen, fut_edges):
-                if fut is not None:
-                    fut.result()
-            # count 'scheduled' from the epoch table WRITTEN two steps ago,
-            # not the live plan: nxt's lineage is the whole
-            # extraction->anti-join->rank->admission pipeline, and the
-            # partition-count job was re-running all of it per epoch (~10% of
-            # loop wall at the bench point); the stored table is one file scan
-            # with the same rows
-            # metrics write overlapped with the bloom fold below (both only
-            # READ the already-filled fetched cache / the stored frontier
-            # file, so no cache-fill lock contention); joined before the
-            # bucketed append for the eviction-recompute reason above
-            fut_metrics = _submit(
-                mpool if mpool is not None else pool, self._log_metrics, epoch,
-                [("crawled", fetched),
-                 ("scheduled", store.read_epoch(spark, "frontier", epoch))],
-            )
-            self._step(epoch, "bloom_insert")
-            bloom = self._bloom_insert(bloom, seen_delta)
-            if bloom is not None:
-                store.write_bloom(epoch, bloom)
-            if fut_metrics is not None:
+                self._step(epoch, "frontier_write")
+                store.write_epoch(mode.table, epoch, nxt, coalesce=coalesce)
+                # metrics BEFORE the bucketed append: the metrics job re-evaluates
+                # plans whose lineage anti-joins the bucketed seen table; after the
+                # append, a cache eviction would recompute them against a table
+                # that already contains this wave's own rows. 'scheduled' counts
+                # the frontier table just WRITTEN, not the live plan (whose
+                # lineage is the whole extraction->admission pipeline).
+                self._step(epoch, "metrics")
+                stored = store.read_epoch(spark, mode.table, epoch)
+                fut_metrics = mpool.submit(
+                    self._log_metrics, epoch, [("crawled", fetched), ("scheduled", stored)]
+                )
+                self._step(epoch, "bloom_insert")
+                bloom = self._bloom_insert(bloom, prefilter_keys)
+                if bloom is not None:
+                    store.write_bloom(epoch, bloom)
                 fut_metrics.result()
-            if self._bucketed is not None:
-                # append AFTER all of this wave's anti-join consumers ran —
-                # spark.table() is lazy, so an earlier append would leak this
-                # wave's seen rows into its own candidate filtering
-                self._step(epoch, "seen_append")
-                keys = seen_delta.select("url_hash")
-                if self._bucketed.exists():
-                    self._bucketed.append(keys)
-                else:
-                    self._bucketed.init(keys)
+                if bucketed is not None:
+                    # append AFTER all of this wave's anti-join consumers ran —
+                    # spark.table() is lazy, so an earlier append would leak this
+                    # wave's seen rows into its own candidate filtering
+                    self._step(epoch, "seen_append")
+                    keys = seen_delta.select("url_hash")
+                    if bucketed.exists():
+                        bucketed.append(keys)
+                    else:
+                        bucketed.init(keys)
 
-            crawled += n_crawled_wave
-            store.commit({"epoch": epoch, "crawled": crawled, "mode": "bfs"})
-            if self.compact_every and epoch % self.compact_every == 0:
-                store.compact(spark, "seen", epoch)
-            self.stats.per_epoch.append(
-                {"epoch": epoch, "wave": n_wave, "crawled": n_crawled_wave, "candidates": n_cand}
-            )
-            fetched.unpersist()
-            links.unpersist()
-            unpersist_all()
-            self._step(epoch, "commit+next_wave_count")
-            frontier = store.read_epoch(spark, "frontier", epoch)
-            n_wave = n_cand if bound < cfg.max_pages else frontier.count()
+                self._step(epoch, "commit+next_wave_count")
+                crawled += ep.n_crawl
+                store.commit({"epoch": epoch, "crawled": crawled, **mode.ckpt()})
+                if self.compact_every and epoch % self.compact_every == 0:
+                    store.compact(spark, "seen", epoch)
+                self.stats.per_epoch.append(mode.epoch_stats(ep))
+                fetched.unpersist()
+                links.unpersist()
+                unpersist_all()
+                frontier = store.read_epoch(spark, mode.table, epoch)
+                n_front = mode.next_count(frontier) if crawled < cfg.max_pages else 0
 
-        self._step(epoch, "end")  # flush the last step's wall into prof
+        self._step(epoch, "end")
         self.stats.epochs = epoch
         self.stats.crawled = crawled
         self.stats.wall_seconds = time.monotonic() - t0
@@ -930,8 +851,6 @@ class CrawlEngine:
 
         spark = self.spark
         out = {"stats": self.stats}
-        if self._prof is not None:
-            out["prof"] = self._prof
         for name, schema in (
             ("seen", schemas.SEEN),
             ("edges", schemas.EDGES_STORED),
@@ -940,409 +859,6 @@ class CrawlEngine:
         ):
             df = self.store.read_deltas(spark, name, upto_epoch)
             out[name] = df if df is not None else spark.createDataFrame([], schema)
-        return out
-
-    # -- scheduler (priority-frontier) mode --------------------------------------
-
-    def run_scheduler(
-        self,
-        seeds: list[str],
-        resume: bool = False,
-        max_epochs: int = 10_000,
-        collect_waves: bool = False,
-    ) -> dict:
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(max_workers=2) if self.concurrent_sinks else None
-        # metrics pool: same always-on overlap as BFS mode (the counters
-        # write only reads the filled caches / stored epoch tables)
-        mpool = ThreadPoolExecutor(max_workers=1)
-        try:
-            return self._run_scheduler(
-                seeds, resume, max_epochs, collect_waves, pool, mpool
-            )
-        finally:
-            mpool.shutdown(wait=True)
-            if pool is not None:
-                pool.shutdown(wait=True)
-
-    def _run_scheduler(
-        self,
-        seeds: list[str],
-        resume: bool,
-        max_epochs: int,
-        collect_waves: bool,
-        pool,
-        mpool=None,
-    ) -> dict:
-        cfg, spark, store = self.cfg, self.spark, self.store
-        t0 = time.monotonic()
-
-        robots = self.robots
-        delay_expr = (
-            F.coalesce(F.col("crawl_delay"), F.lit(cfg.delay_seconds))
-            if robots is not None
-            else F.lit(cfg.delay_seconds)
-        )
-
-        ckpt = store.read_checkpoint() if resume else None
-        if ckpt is not None:
-            epoch = int(ckpt["epoch"])
-            crawled = int(ckpt["crawled"])
-            seq_counter = int(ckpt["seq"])
-            self.stats.resumed_from = epoch
-            self.stats.crawled_at_resume = crawled
-            frontier = store.read_epoch(spark, "frontier_sched", epoch)
-            bloom = store.read_bloom(epoch) if self.use_bloom else None
-        else:
-            store.reset()  # a fresh run must not inherit prior generations
-            epoch = 0
-            crawled = 0
-            seed_rows = [(u, i) for i, u in enumerate(seeds)]
-            df = local_df(spark, seed_rows, "url string, arrival_seq long")
-            # sitemap -> frontier wiring (robots_parser.py:149-171 discovery
-            # path): robots `Sitemap:` URLs are depth-0 candidates admitted
-            # after the user seeds, deterministically ordered by
-            # (host, position-in-robots-row)
-            if robots is not None and cfg.sitemap_seeding:
-                sm = robots.select(
-                    "host",
-                    F.posexplode(
-                        F.coalesce("sitemaps", F.array().cast("array<string>"))
-                    ).alias("sm_pos", "url"),
-                )
-                sm_idx, n_sm = with_global_index(
-                    sm, ["host", "sm_pos"], "sm_seq", small=True
-                )
-                if n_sm:
-                    df = df.unionByName(
-                        sm_idx.select(
-                            "url",
-                            (F.col("sm_seq") + F.lit(len(seeds))).alias("arrival_seq"),
-                        )
-                    )
-            df = (
-                self._with_keys(df)
-                .withColumn("depth", F.lit(0))
-                .withColumn("priority", F.lit(1))
-                .withColumn("retries", F.lit(0))
-            )
-            df = self._admission_filters(df)
-            # admission-dedup WITHIN the initial set (sim's `enqueued` set
-            # skips a sitemap URL that equals a seed, and duplicate seeds):
-            # keep the first arrival per canonical identity
-            w0 = Window.partitionBy("url_hash").orderBy("arrival_seq")
-            df = (
-                df.withColumn("_rn0", F.row_number().over(w0))
-                .filter(F.col("_rn0") == 1)
-                .drop("_rn0")
-            )
-            # re-sequence densely over the ADMITTED set, so absolute
-            # arrival_seq matches the sim (which only advances seq for
-            # admitted URLs) and seq_counter == admitted count — a filtered
-            # seed no longer leaves a gap that a later admission could never
-            # share but an absolute-seq consumer would see (ADVICE r03 #5)
-            df, n_admitted = with_global_index(
-                df, ["arrival_seq"], out_col="_seq_dense", small=True
-            )
-            df = df.drop("arrival_seq").withColumnRenamed("_seq_dense", "arrival_seq")
-            seq_counter = n_admitted
-            frontier = df.select(
-                "url", "url_hash", "xx64", "host", "depth", "priority", "retries", "arrival_seq"
-            )
-            store.write_epoch("frontier_sched", 0, frontier)
-            frontier = store.read_epoch(spark, "frontier_sched", 0)
-            # 'enqueued' admission-dedup state (scheduler mode dedups at admission)
-            store.write_epoch("enqueued", 0, frontier.select("url_hash", "xx64", F.lit(0).alias("epoch")))
-            bloom = (
-                np.zeros(self.bloom_bits // 8, dtype=np.uint8)
-                if self.use_bloom and self.bloom_layout == "single"
-                else None
-            )
-            if self.use_bloom:
-                bloom = self._bloom_insert(bloom, frontier)
-            if bloom is not None:
-                store.write_bloom(0, bloom)
-            store.commit({"epoch": 0, "crawled": 0, "seq": seq_counter, "mode": "sched"})
-
-        while crawled < cfg.max_pages and epoch < max_epochs:
-            ctl = store.read_control()  # pause/cancel (job_coordinator.py:282-369)
-            if ctl in ("paused", "cancelled"):
-                self.stats.stopped = ctl
-                break
-            n_front = frontier.count()
-            if n_front == 0:
-                break
-            small = n_front < self.small_wave_threshold
-            epoch += 1
-
-            # circuit breaker (distributed_circuit_breaker.py:22-118 via
-            # streaming/stream.py host_state semantics): hosts whose
-            # cumulative fetch failures BEFORE this epoch reached the
-            # threshold are not issued; their queued tasks stay in the
-            # frontier (leftover keeps them automatically)
-            base = frontier
-            prior_seen = store.read_deltas(spark, "seen", epoch - 1)
-            if prior_seen is not None:
-                from ..streaming.stream import FAILURE_THRESHOLD
-
-                open_hosts = (
-                    prior_seen.select(
-                        url_host("url").alias("host"), "status_code"
-                    )
-                    .groupBy("host")
-                    .agg(
-                        F.sum(
-                            F.when(F.col("status_code") >= 400, 1).otherwise(0)
-                        ).alias("_fails")
-                    )
-                    .filter(F.col("_fails") >= F.lit(FAILURE_THRESHOLD))
-                    .select("host")
-                )
-                base = base.join(F.broadcast(open_hosts), "host", "left_anti")
-
-            # W2+W3: politeness-budget wave via salted per-host top-k
-            # (skew-safe; identical result to the naive host window)
-            if robots is not None:
-                base = base.join(
-                    F.broadcast(robots.select("host", "crawl_delay")), "host", "left"
-                )
-            budget = F.least(
-                F.lit(cfg.host_budget),
-                F.floor(F.lit(cfg.epoch_seconds) / F.greatest(delay_expr, F.lit(1e-9))).cast("int"),
-            )
-            base = base.withColumn("_budget", budget)
-            issued = per_host_topk(base, F.col("_budget")).drop("_budget", "crawl_delay")
-            leftover = frontier.join(
-                issued.select("arrival_seq"), "arrival_seq", "left_anti"
-            ).select(
-                "url", "url_hash", "xx64", "host", "depth", "priority", "retries", "arrival_seq"
-            )
-
-            # W1: global wave order (priority, host, rank) (:163)
-            issued_idx, n_issued = with_global_index(
-                issued, ["priority", "host", "rank"], "wave_idx", small=small
-            )
-            if n_issued == 0:
-                break
-            remaining = cfg.max_pages - crawled
-            overflow = None
-            if n_issued > remaining:
-                overflow = issued_idx.filter(F.col("wave_idx") >= F.lit(remaining)).select(
-                    "url", "url_hash", "xx64", "host", "depth", "priority", "retries", "arrival_seq"
-                )
-                issued_idx = issued_idx.filter(F.col("wave_idx") < F.lit(remaining))
-
-            crawlable = issued_idx.filter(F.col("depth") < F.lit(cfg.max_depth))
-            ordered, n_crawl = with_global_index(crawlable, ["wave_idx"], "crawl_idx", small=small)
-
-            fetched = self._fetch_join(
-                ordered.withColumn("crawl_order", F.col("crawl_idx") + F.lit(crawled)),
-                n_crawl,
-            )
-            fetched.persist()
-
-            seen_delta = fetched.select(
-                "url_hash", "url", "xx64", "depth", "crawl_order", "status_code",
-                F.lit(epoch).alias("epoch"),
-            )
-            self._step(epoch, "fetch_join+seen_write")
-            # independent sink, overlapped as in the BFS loop
-            fut_seen = _submit(
-                pool, store.write_epoch, "seen", epoch, seen_delta,
-                coalesce=1 if small else None,
-            )
-
-            pages = self._pages_for_extraction(
-                fetched, ["url", "wave_idx", "depth", "spans"]
-            )
-            links = (
-                with_links(pages, doc_col="url")
-                .select(
-                    F.col("url").alias("src"), "wave_idx", "depth",
-                    F.explode("links").alias("l"),
-                )
-                .select(
-                    "src", "wave_idx", "depth",
-                    F.col("l.href").alias("dst"), F.col("l.anchor_text").alias("anchor_text"),
-                    F.col("l.rel").alias("rel"), F.col("l.link_type").alias("link_type"),
-                    F.col("l.context_text").alias("context_text"),
-                    F.col("l.pos").alias("pos"), F.col("l.from_tag").alias("from_tag"),
-                    F.col("l.first").alias("first"),
-                )
-            )
-            links.persist()
-
-            # shuffle-free (src,dst) dedup — see the BFS site above
-            edges_new = (
-                links.filter(F.col("first"))
-                .select(
-                    "src", "dst", url_host("src").alias("src_host"),
-                    url_host("dst").alias("dst_host"),
-                    "anchor_text", "link_type", "rel", "context_text", "pos", "depth",
-                    *self._edge_analytics_cols(epoch),
-                    F.lit(epoch).alias("epoch"),
-                )
-            )
-            self._step(epoch, "extract+edges_write")
-            fut_edges = _submit(
-                pool, store.write_epoch, "edges", epoch, edges_new,
-                coalesce=1 if small else None,
-            )
-
-            # new candidates: admission-dedup vs 'enqueued' state + robots/domain
-            cand = (
-                links.filter(F.col("from_tag") == "a")
-                .select(
-                    F.col("dst").alias("url"), "wave_idx", "pos",
-                    (F.col("depth") + 1).alias("depth"),
-                )
-            )
-            # W4 input: inbound-link count across the WHOLE wave, counted
-            # before any admission filter (ai/crawl_optimizer.py backlink
-            # boost; oracle_sim counts the same pre-filter link events)
-            cand = cand.withColumn(
-                "_bl", F.count("*").over(Window.partitionBy("url"))
-            )
-            cand = self._with_keys(cand)
-            cand = self._admission_filters(cand)
-            enq = store.read_deltas(spark, "enqueued", epoch - 1)
-            cand = self._not_seen(cand, enq, bloom)
-            # first occurrence within wave (enqueued-set updates sequentially)
-            wq = Window.partitionBy("url_hash").orderBy("wave_idx", "pos")
-            cand = (
-                cand.withColumn("_rn", F.row_number().over(wq))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-            # W4: priority from the crawl-optimizer score (depth decay +
-            # backlink boost + target-host error rate through THIS epoch),
-            # wired into admission (VERDICT r01 #7; frontier.py:57-89)
-            from .frontier import priority_score, score_to_priority
-
-            # the W4 error-rate input re-reads THIS epoch's seen delta from
-            # the store — an overlapped write of it must be joined first (an
-            # in-flight table is absent or partially written: wrong
-            # priorities, order diverging from the oracle sim)
-            if fut_seen is not None:
-                fut_seen.result()
-                fut_seen = None
-            cur_seen = store.read_deltas(spark, "seen", epoch)
-            host_err = (
-                cur_seen.select(url_host("url").alias("host"), "status_code")
-                .groupBy("host")
-                .agg(
-                    (
-                        F.sum(F.when(F.col("status_code") >= 400, 1).otherwise(0))
-                        / F.count("*")
-                    ).alias("_err")
-                )
-            )
-            cand = (
-                cand.join(F.broadcast(host_err), "host", "left")
-                .withColumn(
-                    "priority",
-                    score_to_priority(
-                        priority_score(
-                            F.col("depth"),
-                            backlink_count=F.col("_bl"),
-                            error_rate=F.coalesce(F.col("_err"), F.lit(0.0)),
-                        )
-                    ),
-                )
-                .drop("_bl", "_err")
-                .withColumn("retries", F.lit(0))
-            )
-            # three consumers (admissions index, enqueued write, bloom build)
-            # — persist once, released at the epoch's unpersist_all barrier
-            cand.persist()
-            track_persist(cand)
-
-            # retries: failed fetch with retryable status (W5, :182-192)
-            retry_src = fetched.filter(
-                F.col("status_code").isin(408, 500, 502, 503, 504)
-            )
-            retries_df = retry_src.filter(F.col("retries") < F.lit(cfg.max_retries)).select(
-                "url", "url_hash", "xx64", "host", "depth",
-                F.least(F.lit(4), F.col("priority") + 1).alias("priority"),
-                (F.col("retries") + 1).alias("retries"),
-                "wave_idx", F.lit(-1).alias("pos"),
-            )
-            dead = retry_src.filter(F.col("retries") >= F.lit(cfg.max_retries)).select(
-                "url", "host", "retries",
-                F.col("status_code").alias("last_status"),
-                F.lit(epoch).alias("epoch"),
-            )
-            store.write_epoch("dead_letter", epoch, dead, coalesce=1 if small else None)
-
-            admissions = cand.select(
-                "url", "url_hash", "xx64", "host", "depth", "priority", "retries",
-                "wave_idx", "pos",
-            ).unionByName(retries_df)
-            admissions, n_adm = with_global_index(admissions, ["wave_idx", "pos"], "_seq", small=small)
-            self.stats.scheduled += n_adm
-            admissions = admissions.withColumn(
-                "arrival_seq", F.col("_seq") + F.lit(seq_counter)
-            ).select("url", "url_hash", "xx64", "host", "depth", "priority", "retries", "arrival_seq")
-            seq_counter += n_adm
-
-            nxt = leftover.unionByName(admissions)
-            if overflow is not None:
-                nxt = nxt.unionByName(overflow)
-            store.write_epoch("frontier_sched", epoch, nxt, coalesce=1 if small else None)
-            store.write_epoch(
-                "enqueued", epoch,
-                cand.select("url_hash", "xx64").withColumn("epoch", F.lit(epoch)),
-                coalesce=1 if small else None,
-            )
-            # metrics overlapped with the bloom fold (stored-table count,
-            # not the live union plan — see BFS loop); joined before commit
-            fut_metrics = _submit(
-                mpool if mpool is not None else pool, self._log_metrics, epoch,
-                [("crawled", fetched),
-                 ("scheduled", store.read_epoch(spark, "frontier_sched", epoch))],
-            )
-            bloom = self._bloom_insert(bloom, cand.select("xx64"))
-            if bloom is not None:
-                store.write_bloom(epoch, bloom)
-            # join the overlapped sinks before commit/unpersist (resume
-            # contract: a committed epoch's files all exist)
-            for fut in (fut_seen, fut_edges, fut_metrics):
-                if fut is not None:
-                    fut.result()
-
-            crawled += n_crawl
-            store.commit({"epoch": epoch, "crawled": crawled, "seq": seq_counter, "mode": "sched"})
-            self.stats.per_epoch.append(
-                {"epoch": epoch, "issued": n_issued, "crawled": n_crawl, "admitted": n_adm}
-            )
-            fetched.unpersist()
-            links.unpersist()
-            unpersist_all()
-            frontier = store.read_epoch(spark, "frontier_sched", epoch)
-
-        self._step(epoch, "end")  # flush the last step's wall into prof
-        self.stats.epochs = epoch
-        self.stats.crawled = crawled
-        self.stats.wall_seconds = time.monotonic() - t0
-        out = self._outputs(epoch)
-        if collect_waves:
-            # oracle-equality diagnostics only: one driver collect at the END
-            # of the run, reconstructed from the epoch-stamped seen deltas.
-            # The hot loop itself never collects (at the 10^10 design point
-            # this opt-in is a test-scale tool, never production state).
-            rows = (
-                out["seen"]
-                .select("epoch", "crawl_order", "url", "depth")
-                .orderBy("crawl_order")
-                .collect()
-            )
-            by_epoch: dict[int, list[tuple[str, int]]] = {}
-            for r in rows:
-                by_epoch.setdefault(int(r["epoch"]), []).append((r["url"], int(r["depth"])))
-            out["waves"] = [
-                by_epoch.get(e["epoch"], []) for e in self.stats.per_epoch
-            ]
         return out
 
     def _admission_filters(self, df: DataFrame) -> DataFrame:
@@ -1361,3 +877,324 @@ class CrawlEngine:
                 ~disallowed_catalyst(F.col("url"), F.col("disallow"))
             ).drop("disallow")
         return out
+
+
+# -- crawl modes: wave selection + child admission -------------------------------
+#
+# A mode is what the epoch loop asks of it:
+#   table / parents / probes_seen   frontier table; page columns each link
+#                                   carries (renamed); whether the anti-joins
+#                                   probe `seen` (so the bucketed layout applies)
+#   seed_frontier, seed_prefilter   the epoch-0 frontier and prefilter state
+#   ckpt, resume                    mode keys of the checkpoint manifest
+#   select_wave(ep, frontier)       (ranked wave with crawl_idx, its size),
+#                                   or None to stop
+#   admit(ep, fetched, cand)        (next frontier, keys for the prefilter)
+#   epoch_stats, next_count         stats.per_epoch row; next frontier's size
+
+
+class _Bfs:
+    """Exact BFS (crawl_service.py:487-601): the frontier is one depth wave."""
+
+    table = "frontier"
+    parents = {"wave_seq": "parent_q", "crawl_idx": "parent_k"}
+    probes_seen = True
+
+    def __init__(self, eng: CrawlEngine):
+        self.eng = eng
+
+    def ckpt(self) -> dict:
+        return {"mode": "bfs"}
+
+    def resume(self, ckpt: dict) -> None:
+        pass
+
+    def seed_frontier(self, seeds: list[str]) -> DataFrame:
+        rows = [(u, i) for i, u in enumerate(seeds)]
+        df = local_df(self.eng.spark, rows, "url string, wave_seq long")
+        return self.eng._with_keys(df).withColumn("depth", F.lit(0)).select(*_FRONTIER_COLS)
+
+    def seed_prefilter(self, frontier: DataFrame, bloom):
+        return bloom  # the prefilter holds crawled pages; none yet
+
+    def select_wave(self, ep: _Epoch, frontier: DataFrame):
+        cfg = self.eng.cfg
+        # dequeue-time skips: depth >= max_depth (crawl_service.py:499-501),
+        # seen (:497-498), first-occurrence within the wave (dup enqueues).
+        # Dedup on url_hash, not raw url: they are the same identity under
+        # canonical_mode='identity' (sha256 of the raw string), but under
+        # 'full' two raw spellings of one canonical URL must collapse here.
+        # wave_seq is dense-unique, so the first occurrence is well defined.
+        elig = frontier.filter(F.col("depth") < F.lit(cfg.max_depth))
+        elig = _first_occurrence(elig, "url_hash", F.col("wave_seq"))
+        elig = self.eng._not_seen(elig, ep.seen, ep.bloom)
+        # bucket_by: wave_seq is dense in [0, n_front) by construction
+        # (seed/admission/indexing all emit dense indexes), so the global
+        # index needs no range-sampling pass over the filter lineage
+        ranked, n_elig = with_global_index(
+            elig, ["wave_seq"], "crawl_idx", small=ep.small,
+            bucket_by=("wave_seq", ep.n_front),
+        )
+        cut = cfg.max_pages - ep.crawled
+        if n_elig > cut:
+            ranked = ranked.filter(F.col("crawl_idx") < F.lit(cut))
+        return ranked, min(n_elig, cut)
+
+    def admit(self, ep: _Epoch, fetched: DataFrame, cand: DataFrame):
+        eng, cfg = self.eng, self.eng.cfg
+        # children admission (enqueue checks, crawl_service.py:595-601)
+        cand = eng._with_keys(cand)
+        if cfg.allowed_domains:
+            cand = cand.filter(F.col("host").isin(*sorted(cfg.allowed_domains)))
+        cand = eng._not_seen(cand, ep.seen, ep.bloom)
+        # not crawled earlier in THIS wave (seen set grows during the wave);
+        # keyed on url_hash for the same canonical-identity reason as above
+        cw = fetched.select(F.col("url_hash").alias("_cu"), F.col("crawl_idx").alias("_ck"))
+        cand = (
+            cand.join(cw, cand["url_hash"] == cw["_cu"], "left")
+            .filter(F.col("_ck").isNull() | (F.col("_ck") > F.col("parent_k")))
+            .drop("_cu", "_ck")
+        )
+
+        eng._step(ep.n, "rank_candidates")
+        # keep_pid: budget admission below reuses this pass's partitioning
+        # + in-partition order, so it needs no re-shuffle of its own
+        nxt, self.n_cand = with_global_index(
+            cand, ["parent_q", "pos"], "wave_seq", small=ep.small, keep_pid=True,
+            # parent_q (the parent's dense wave position) is the leading
+            # order column and lives in [0, n_front)
+            bucket_by=("parent_q", ep.n_front),
+        )
+        eng.stats.scheduled += self.n_cand
+
+        # max_pages admission budget (crawl_service.py:599-600). Fast path:
+        # upper bound of crawled+qsize over the whole wave can't reach the
+        # budget => everything admitted, no sequential work.
+        self.bound = ep.crawled + ep.n_crawl + ep.n_front + self.n_cand
+        if self.bound >= cfg.max_pages:
+            eng._step(ep.n, "sequential_admission")
+            nxt = eng._sequential_admission(nxt, ep.crawled, ep.n_front)
+        return nxt.select(*_FRONTIER_COLS), fetched.select("xx64")
+
+    def epoch_stats(self, ep: _Epoch) -> dict:
+        return {"epoch": ep.n, "wave": ep.n_front, "crawled": ep.n_crawl, "candidates": self.n_cand}
+
+    def next_count(self, frontier: DataFrame) -> int:
+        # all admitted (fast path): the rank pass already counted them
+        return self.n_cand if self.bound < self.eng.cfg.max_pages else frontier.count()
+
+
+class _Scheduler:
+    """Priority frontier (smart_crawler_queue.py) under logical politeness
+    epochs; the frontier carries every queued task across epochs."""
+
+    table = "frontier_sched"
+    parents = {"wave_idx": "wave_idx"}
+    probes_seen = False  # admission dedups against `enqueued`
+
+    def __init__(self, eng: CrawlEngine):
+        self.eng = eng
+        self.seq = 0  # arrival_seq of the next admitted task
+
+    def ckpt(self) -> dict:
+        return {"seq": self.seq, "mode": "sched"}
+
+    def resume(self, ckpt: dict) -> None:
+        self.seq = int(ckpt["seq"])
+
+    def seed_frontier(self, seeds: list[str]) -> DataFrame:
+        eng, cfg, robots = self.eng, self.eng.cfg, self.eng.robots
+        rows = [(u, i) for i, u in enumerate(seeds)]
+        df = local_df(eng.spark, rows, "url string, arrival_seq long")
+        # sitemap -> frontier wiring (robots_parser.py:149-171 discovery
+        # path): robots `Sitemap:` URLs are depth-0 candidates admitted
+        # after the user seeds, deterministically ordered by
+        # (host, position-in-robots-row)
+        if robots is not None and cfg.sitemap_seeding:
+            sm = robots.select(
+                "host",
+                F.posexplode(
+                    F.coalesce("sitemaps", F.array().cast("array<string>"))
+                ).alias("sm_pos", "url"),
+            )
+            sm_idx, n_sm = with_global_index(sm, ["host", "sm_pos"], "sm_seq", small=True)
+            if n_sm:
+                df = df.unionByName(
+                    sm_idx.select(
+                        "url",
+                        (F.col("sm_seq") + F.lit(len(seeds))).alias("arrival_seq"),
+                    )
+                )
+        df = (
+            eng._with_keys(df)
+            .withColumn("depth", F.lit(0))
+            .withColumn("priority", F.lit(1))
+            .withColumn("retries", F.lit(0))
+        )
+        df = eng._admission_filters(df)
+        # admission-dedup WITHIN the initial set (sim's `enqueued` set
+        # skips a sitemap URL that equals a seed, and duplicate seeds):
+        # keep the first arrival per canonical identity
+        df = _first_occurrence(df, "url_hash", F.col("arrival_seq"))
+        # re-sequence densely over the ADMITTED set, so absolute
+        # arrival_seq matches the sim (which only advances seq for
+        # admitted URLs) and seq == admitted count — a filtered seed no
+        # longer leaves a gap that a later admission could never share but
+        # an absolute-seq consumer would see (ADVICE r03 #5)
+        df, self.seq = with_global_index(df, ["arrival_seq"], out_col="_seq_dense", small=True)
+        df = df.drop("arrival_seq").withColumnRenamed("_seq_dense", "arrival_seq")
+        return df.select(*_SCHED_COLS)
+
+    def seed_prefilter(self, frontier: DataFrame, bloom):
+        # 'enqueued' admission-dedup state (scheduler mode dedups at admission)
+        self.eng.store.write_epoch(
+            "enqueued", 0, frontier.select("url_hash", "xx64", F.lit(0).alias("epoch"))
+        )
+        return self.eng._bloom_insert(bloom, frontier)
+
+    def select_wave(self, ep: _Epoch, frontier: DataFrame):
+        cfg, robots = self.eng.cfg, self.eng.robots
+        base = frontier
+        # circuit breaker (distributed_circuit_breaker.py:22-118 via
+        # streaming/stream.py host_state semantics): hosts whose cumulative
+        # fetch failures BEFORE this epoch reached the threshold are not
+        # issued; their queued tasks stay in the frontier (leftover keeps
+        # them automatically)
+        if ep.seen is not None:
+            from ..streaming.stream import FAILURE_THRESHOLD
+
+            open_hosts = (
+                ep.seen.select(url_host("url").alias("host"), "status_code")
+                .groupBy("host")
+                .agg(F.sum(F.when(F.col("status_code") >= 400, 1).otherwise(0)).alias("_fails"))
+                .filter(F.col("_fails") >= F.lit(FAILURE_THRESHOLD))
+                .select("host")
+            )
+            base = base.join(F.broadcast(open_hosts), "host", "left_anti")
+
+        # W2+W3: politeness-budget wave via salted per-host top-k
+        # (skew-safe; identical result to the naive host window)
+        delay = F.lit(cfg.delay_seconds)
+        if robots is not None:
+            base = base.join(F.broadcast(robots.select("host", "crawl_delay")), "host", "left")
+            delay = F.coalesce(F.col("crawl_delay"), delay)
+        budget = F.least(
+            F.lit(cfg.host_budget),
+            F.floor(F.lit(cfg.epoch_seconds) / F.greatest(delay, F.lit(1e-9))).cast("int"),
+        )
+        issued = per_host_topk(base.withColumn("_budget", budget), F.col("_budget")).drop(
+            "_budget", "crawl_delay"
+        )
+        self.leftover = frontier.join(
+            issued.select("arrival_seq"), "arrival_seq", "left_anti"
+        ).select(*_SCHED_COLS)
+
+        # W1: global wave order (priority, host, rank) (:163)
+        issued, self.n_issued = with_global_index(
+            issued, ["priority", "host", "rank"], "wave_idx", small=ep.small
+        )
+        if self.n_issued == 0:
+            return None
+        remaining = cfg.max_pages - ep.crawled
+        self.overflow = None
+        if self.n_issued > remaining:
+            over = F.col("wave_idx") >= F.lit(remaining)
+            self.overflow = issued.filter(over).select(*_SCHED_COLS)
+            issued = issued.filter(~over)
+        crawlable = issued.filter(F.col("depth") < F.lit(cfg.max_depth))
+        return with_global_index(crawlable, ["wave_idx"], "crawl_idx", small=ep.small)
+
+    def admit(self, ep: _Epoch, fetched: DataFrame, cand: DataFrame):
+        from .frontier import priority_score, score_to_priority
+
+        eng, cfg, store, spark = self.eng, self.eng.cfg, self.eng.store, self.eng.spark
+        eng._step(ep.n, "rank_candidates")
+        # W4 input: inbound-link count across the WHOLE wave, counted
+        # before any admission filter (ai/crawl_optimizer.py backlink
+        # boost; oracle_sim counts the same pre-filter link events)
+        cand = cand.withColumn("_bl", F.count("*").over(Window.partitionBy("url")))
+        cand = eng._admission_filters(eng._with_keys(cand))
+        cand = eng._not_seen(cand, store.read_deltas(spark, "enqueued", ep.n - 1), ep.bloom)
+        # first occurrence within the wave (the enqueued set updates
+        # sequentially); (wave_idx, pos) is unique per link row
+        cand = _first_occurrence(cand, "url_hash", F.struct("wave_idx", "pos"))
+        # W4: priority from the crawl-optimizer score (depth decay +
+        # backlink boost + target-host error rate through THIS epoch, read
+        # back from the seen delta written above), wired into admission
+        # (VERDICT r01 #7; frontier.py:57-89)
+        host_err = (
+            store.read_deltas(spark, "seen", ep.n)
+            .select(url_host("url").alias("host"), "status_code")
+            .groupBy("host")
+            .agg(
+                (
+                    F.sum(F.when(F.col("status_code") >= 400, 1).otherwise(0)) / F.count("*")
+                ).alias("_err")
+            )
+        )
+        cand = (
+            cand.join(F.broadcast(host_err), "host", "left")
+            .withColumn(
+                "priority",
+                score_to_priority(
+                    priority_score(
+                        F.col("depth"),
+                        backlink_count=F.col("_bl"),
+                        error_rate=F.coalesce(F.col("_err"), F.lit(0.0)),
+                    )
+                ),
+            )
+            .drop("_bl", "_err")
+            .withColumn("retries", F.lit(0))
+        )
+        # three consumers (admissions index, enqueued write, prefilter fold)
+        # — persist once, released at the epoch's unpersist_all barrier
+        cand.persist()
+        track_persist(cand)
+
+        # retries: failed fetch with retryable status (W5, :182-192)
+        retry_src = fetched.filter(F.col("status_code").isin(408, 500, 502, 503, 504))
+        retries_df = retry_src.filter(F.col("retries") < F.lit(cfg.max_retries)).select(
+            "url", "url_hash", "xx64", "host", "depth",
+            F.least(F.lit(4), F.col("priority") + 1).alias("priority"),
+            (F.col("retries") + 1).alias("retries"),
+            "wave_idx", F.lit(-1).alias("pos"),
+        )
+        admissions = cand.select(
+            "url", "url_hash", "xx64", "host", "depth", "priority", "retries", "wave_idx", "pos",
+        ).unionByName(retries_df)
+        admissions, self.n_adm = with_global_index(
+            admissions, ["wave_idx", "pos"], "_seq", small=ep.small
+        )
+        eng.stats.scheduled += self.n_adm
+        admissions = admissions.withColumn(
+            "arrival_seq", F.col("_seq") + F.lit(self.seq)
+        ).select(*_SCHED_COLS)
+        self.seq += self.n_adm
+
+        eng._step(ep.n, "dead_letter+enqueued_write")
+        coalesce = 1 if ep.small else None
+        dead = retry_src.filter(F.col("retries") >= F.lit(cfg.max_retries)).select(
+            "url", "host", "retries",
+            F.col("status_code").alias("last_status"),
+            F.lit(ep.n).alias("epoch"),
+        )
+        store.write_epoch("dead_letter", ep.n, dead, coalesce=coalesce)
+        store.write_epoch(
+            "enqueued", ep.n,
+            cand.select("url_hash", "xx64").withColumn("epoch", F.lit(ep.n)),
+            coalesce=coalesce,
+        )
+
+        nxt = self.leftover.unionByName(admissions)
+        if self.overflow is not None:
+            nxt = nxt.unionByName(self.overflow)
+        return nxt, cand.select("xx64")
+
+    def epoch_stats(self, ep: _Epoch) -> dict:
+        return {
+            "epoch": ep.n, "issued": self.n_issued, "crawled": ep.n_crawl, "admitted": self.n_adm,
+        }
+
+    def next_count(self, frontier: DataFrame) -> int:
+        return frontier.count()

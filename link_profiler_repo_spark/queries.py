@@ -667,12 +667,14 @@ SPARK_QUERIES = {
 # actual output schema — discovered_at/http_status/spam_level, VERDICT r01 #8)
 # ---------------------------------------------------------------------------
 
-# pid-suffixed so two concurrent gate runs (driver + a local check) cannot
-# clobber each other's parquet; the oracle SQL strings interpolate the same
-# module-level constant, so Spark writer and DuckDB reader always agree
-# within a process (VERDICT r02 minor #6)
-_GATE_EDGES_PATH = f"/tmp/spark_graft_gate_edges_{os.getpid()}"
-_GATE_SEEN_PATH = f"/tmp/spark_graft_gate_seen_{os.getpid()}"
+# Every gate export lives under one FIXED directory: the oracle SQL strings
+# interpolate these module-level constants, so Spark writer and DuckDB reader
+# always agree (VERDICT r02 minor #6), and oracle_sql() renders the same text
+# in every process. Two gate runs on one host share the directory, so run
+# them one at a time.
+_GATE_DIR = "/tmp/spark_graft_gate"
+_GATE_EDGES_PATH = f"{_GATE_DIR}/edges"
+_GATE_SEEN_PATH = f"{_GATE_DIR}/seen"
 
 
 _CRAWLED_EDGES_MEMO: set = set()
@@ -902,7 +904,7 @@ SELECT doc_id,
 FROM c
 """
 
-_GATE_PAGES_PATH = "/tmp/spark_graft_gate_pages"
+_GATE_PAGES_PATH = f"{_GATE_DIR}/pages"
 
 
 def q_seo_metrics_sql(spark, sf_dir):
@@ -924,7 +926,7 @@ def q_seo_metrics_sql(spark, sf_dir):
 
 
 SQL_SEO_METRICS = r"""
-WITH c AS (SELECT url, content FROM read_parquet('/tmp/spark_graft_gate_pages/*.parquet')),
+WITH c AS (SELECT url, content FROM read_parquet('/tmp/spark_graft_gate/pages/*.parquet')),
 m AS (
   SELECT url, content,
          regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.\-]*://([^/?#]*)', 1) AS page_host,
@@ -1169,8 +1171,8 @@ def _crawl_outputs(spark, n_docs=80, n_hosts=6, max_depth=3, max_pages=60):
     return out
 
 
-_GATE_BFS_ORDER_PATH = f"/tmp/spark_graft_gate_bfs_order_{os.getpid()}"
-_GATE_SCHED_ORDER_PATH = f"/tmp/spark_graft_gate_sched_order_{os.getpid()}"
+_GATE_BFS_ORDER_PATH = f"{_GATE_DIR}/bfs_order"
+_GATE_SCHED_ORDER_PATH = f"{_GATE_DIR}/sched_order"
 
 
 def _export_sim_order(spark, order, path):
@@ -1270,8 +1272,8 @@ SPARK_QUERIES["crawl_link_profile"] = q_crawl_link_profile
 SQL_ORACLES["crawl_link_profile"] = SQL_CRAWL_LINK_PROFILE
 
 
-_GATE_SIGS_PATH = f"/tmp/spark_graft_gate_minhash_sigs_{os.getpid()}"
-_GATE_CHUNKS_PATH = f"/tmp/spark_graft_gate_cdc_chunks_{os.getpid()}"
+_GATE_SIGS_PATH = f"{_GATE_DIR}/minhash_sigs"
+_GATE_CHUNKS_PATH = f"{_GATE_DIR}/cdc_chunks"
 
 
 def q_minhash_pairs(spark, sf_dir):
@@ -1349,8 +1351,8 @@ GROUP BY 1, 2 HAVING COUNT(*) >= 2
 """
 
 
-_GATE_IVF_CORPUS_PATH = f"/tmp/spark_graft_gate_ivf_corpus_{os.getpid()}"
-_GATE_IVF_PROBES_PATH = f"/tmp/spark_graft_gate_ivf_probes_{os.getpid()}"
+_GATE_IVF_CORPUS_PATH = f"{_GATE_DIR}/ivf_corpus"
+_GATE_IVF_PROBES_PATH = f"{_GATE_DIR}/ivf_probes"
 
 
 def q_ivf_topk(spark, sf_dir):
@@ -1424,7 +1426,7 @@ def q_media_features(spark, sf_dir):
     return feats.select("media_ref", F.to_json("features").alias("features"))
 
 
-_GATE_MEDIA_PATH = f"/tmp/spark_graft_gate_media_{os.getpid()}"
+_GATE_MEDIA_PATH = f"{_GATE_DIR}/media"
 
 
 def q_media_meta(spark, sf_dir):
@@ -1462,8 +1464,8 @@ SPARK_QUERIES["media_meta"] = q_media_meta
 SQL_ORACLES["media_meta"] = SQL_MEDIA_META
 
 
-_GATE_MEDIA_DECODE_PATH = f"/tmp/spark_graft_gate_media_decode_{os.getpid()}"
-_GATE_MEDIA_WAV_TWIN_PATH = f"/tmp/spark_graft_gate_media_wavtwin_{os.getpid()}"
+_GATE_MEDIA_DECODE_PATH = f"{_GATE_DIR}/media_decode"
+_GATE_MEDIA_WAV_TWIN_PATH = f"{_GATE_DIR}/media_wavtwin"
 
 
 def q_media_decode(spark, sf_dir):
@@ -1672,7 +1674,7 @@ SPARK_QUERIES["partial_dup_chunks"] = q_partial_dup
 SQL_ORACLES["partial_dup_chunks"] = SQL_PARTIAL_DUP
 
 
-_GATE_CELLS_PATH = f"/tmp/spark_graft_gate_ivf_cells_{os.getpid()}"
+_GATE_CELLS_PATH = f"{_GATE_DIR}/ivf_cells"
 
 
 def q_ivf_blocked_pairs(spark, sf_dir):
@@ -1718,7 +1720,7 @@ SPARK_QUERIES["ivf_blocked_pairs"] = q_ivf_blocked_pairs
 SQL_ORACLES["ivf_blocked_pairs"] = SQL_IVF_BLOCKED_PAIRS
 
 
-_GATE_SEMDEDUP_PATH = f"/tmp/spark_graft_gate_semdedup_{os.getpid()}"
+_GATE_SEMDEDUP_PATH = f"{_GATE_DIR}/semdedup"
 
 
 def q_semdedup(spark, sf_dir):
@@ -1743,7 +1745,7 @@ def q_semdedup(spark, sf_dir):
     # the export pipeline (assignment UDF + double cast + parquet encode) is
     # partitioning-independent; fan it out BELOW the UDF so it does not run
     # as one serial task on the single-row-group scan (the oracle globs the
-    # directory, so file count is free). Size-adaptive: ~2k rows per task,
+    # directory, so file count is free). Size-adaptive: ~256 rows per task,
     # capped at the session parallelism — a tiny table is not worth 32
     # Python-worker spin-ups, a big one fans out fully.
     n_par = max(1, min(spark.sparkContext.defaultParallelism, n_rows // 256))
@@ -1904,7 +1906,7 @@ SPARK_QUERIES["prospect_identification"] = q_prospects
 SQL_ORACLES["prospect_identification"] = SQL_PROSPECTS
 
 
-_GATE_AUDIT_PATH = f"/tmp/spark_graft_gate_audit_metrics_{os.getpid()}"
+_GATE_AUDIT_PATH = f"{_GATE_DIR}/audit_metrics"
 
 
 def q_technical_audit(spark, sf_dir):
@@ -1971,7 +1973,7 @@ SPARK_QUERIES["technical_audit"] = q_technical_audit
 SQL_ORACLES["technical_audit"] = SQL_TECHNICAL_AUDIT
 
 
-_GATE_CDX_PATH = f"/tmp/spark_graft_gate_cdx_{os.getpid()}"
+_GATE_CDX_PATH = f"{_GATE_DIR}/cdx"
 
 
 def q_cdx_search(spark, sf_dir):
@@ -2015,8 +2017,8 @@ SPARK_QUERIES["cdx_search"] = q_cdx_search
 SQL_ORACLES["cdx_search"] = SQL_CDX_SEARCH
 
 
-_GATE_BLAPI1_PATH = f"/tmp/spark_graft_gate_blapi1_{os.getpid()}"
-_GATE_BLAPI2_PATH = f"/tmp/spark_graft_gate_blapi2_{os.getpid()}"
+_GATE_BLAPI1_PATH = f"{_GATE_DIR}/blapi1"
+_GATE_BLAPI2_PATH = f"{_GATE_DIR}/blapi2"
 
 
 def q_backlink_api_merge(spark, sf_dir):
@@ -2077,7 +2079,7 @@ SPARK_QUERIES["backlink_api_merge"] = q_backlink_api_merge
 SQL_ORACLES["backlink_api_merge"] = SQL_BACKLINK_API_MERGE
 
 
-_GATE_RENDERED_PATH = f"/tmp/spark_graft_gate_rendered_{os.getpid()}"
+_GATE_RENDERED_PATH = f"{_GATE_DIR}/rendered"
 
 
 def q_rendered_snapshots(spark, sf_dir):
@@ -2935,7 +2937,7 @@ SPARK_QUERIES["corpus_build"] = q_corpus_build
 SQL_ORACLES["corpus_build"] = SQL_CORPUS_BUILD
 
 
-_GATE_SEMCORP_PATH = f"/tmp/spark_graft_gate_semcorp_{os.getpid()}"
+_GATE_SEMCORP_PATH = f"{_GATE_DIR}/semcorp"
 
 
 def q_corpus_build_sem(spark, sf_dir):
@@ -3060,8 +3062,8 @@ SPARK_QUERIES["corpus_build_sem"] = q_corpus_build_sem
 SQL_ORACLES["corpus_build_sem"] = SQL_CORPUS_BUILD_SEM
 
 
-_GATE_BPE_TRAIN_PATH = f"/tmp/spark_graft_gate_bpe_train_{os.getpid()}"
-_GATE_BPE_ENC_PATH = f"/tmp/spark_graft_gate_bpe_enc_{os.getpid()}"
+_GATE_BPE_TRAIN_PATH = f"{_GATE_DIR}/bpe_train"
+_GATE_BPE_ENC_PATH = f"{_GATE_DIR}/bpe_enc"
 
 
 def q_bpe_train(spark, sf_dir):
@@ -4127,7 +4129,7 @@ SQL_ORACLES["frontier_trap_prune"] = SQL_FRONTIER_TRAP_PRUNE
 
 # -- WARC archive source round trip (S-family: the raw Common Crawl tier) ----
 
-_GATE_WARC_DIR = f"/tmp/spark_graft_gate_warc_{os.getpid()}"
+_GATE_WARC_DIR = f"{_GATE_DIR}/warc"
 
 
 def q_warc_roundtrip(spark, sf_dir):

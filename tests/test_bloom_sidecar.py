@@ -163,3 +163,22 @@ def test_build_bloom_adaptive_partials_identical(spark):
     t_wide = build_bloom(df.repartition(32), "xx64", m_bits=tiny_m)
     assert np.array_equal(t_one, t_wide)
     assert one.any() and t_one.any()
+
+
+def test_bloom_rejects_m_bits_beyond_uint32(spark):
+    """Sparse partials carry uint32 bit positions: a filter wider than 2**32
+    bits must fail before any job runs instead of wrapping positions."""
+    import numpy as np
+    import pyspark.sql.functions as F
+    import pytest
+
+    from link_profiler_repo_spark.functions.bloom import add_to_bloom, build_bloom
+
+    df = spark.range(0, 10).select(F.xxhash64("id").alias("xx64"))
+    too_big = (1 << 32) + 64
+    jobs_before = spark.sparkContext.statusTracker().getJobIdsForGroup()
+    with pytest.raises(ValueError, match="2\\*\\*32"):
+        build_bloom(df, "xx64", m_bits=too_big)
+    with pytest.raises(ValueError, match="2\\*\\*32"):
+        add_to_bloom(np.zeros(8, dtype=np.uint8), df, "xx64", too_big)
+    assert spark.sparkContext.statusTracker().getJobIdsForGroup() == jobs_before

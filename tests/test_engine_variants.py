@@ -86,43 +86,3 @@ def test_compaction_matches_oracle(spark):
     assert {r[1] for r in _order(out)} == expected.seen
     docs_df.unpersist()
 
-
-def test_concurrent_sinks_matches_oracle(spark):
-    """concurrent_sinks=True (opt-in: seen/edges writes overlapped with the
-    admission pipeline) must be semantically invisible in BOTH loops. The
-    scheduler is the regression-prone one: its W4 priority step re-reads the
-    current epoch's seen delta from the store, so the overlapped write must
-    be joined before that read (an in-flight table would yield wrong
-    priorities and a silently diverging order)."""
-    from link_profiler_repo_spark.oracle_sim import simulate_scheduler
-    from link_profiler_repo_spark.synth import robots_rows, robots_spark
-
-    cfg = CrawlConfig(job_id="concsinks", max_depth=3, max_pages=300)
-    docs, seeds = build_fixture(P, n_seeds=2)
-    expected = simulate_bfs(docs, seeds, cfg, P)
-    docs_df = synth_docs_spark(spark, P).persist()
-    eng = CrawlEngine(
-        spark, cfg, docs_df, tempfile.mkdtemp(), synth_params=P,
-        use_bloom=False, metrics_enabled=False, concurrent_sinks=True,
-    )
-    out = eng.run_bfs(seeds)
-    assert _order(out) == expected.order
-    assert {r[1] for r in _order(out)} == expected.seen
-
-    scfg = CrawlConfig(
-        job_id="concsinks-sched", max_depth=3, max_pages=60, host_budget=2,
-        epoch_seconds=2.0, max_retries=1,
-    )
-    rr = robots_rows(P)
-    sexp = simulate_scheduler(docs, seeds[:2], scfg, P, robots_rows=rr)
-    seng = CrawlEngine(
-        spark, scfg, docs_df, tempfile.mkdtemp(), synth_params=P,
-        robots_df=robots_spark(spark, P), bloom_bits=1 << 16,
-        metrics_enabled=False, concurrent_sinks=True,
-    )
-    sout = seng.run_scheduler(seeds[:2])
-    rows = sout["seen"].orderBy("crawl_order").select("crawl_order", "url", "depth").collect()
-    got = [(int(r["crawl_order"]), r["url"], int(r["depth"])) for r in rows]
-    assert got == sexp.order
-    assert {r[1] for r in got} == sexp.seen
-    docs_df.unpersist()

@@ -62,3 +62,23 @@ def test_query_matches_duckdb_oracle(spark, name):
     assert len(s_vals) == len(d_vals), f"{name}: row count {len(s_vals)} vs {len(d_vals)}"
     mism = [(a, b) for a, b in zip(s_vals, d_vals) if a != b][:3]
     assert not mism, f"{name}: first value mismatches: {mism}"
+
+
+def test_oracle_sql_identical_across_processes():
+    """oracle_sql() must render the same text in every process: the gate
+    export paths it interpolates are fixed, not keyed on the process."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import json, sys; sys.path.insert(0, '.'); import __spark_entry__ as e; "
+        "sys.stdout.write(json.dumps(e.oracle_sql(), sort_keys=True))"
+    )
+    renders = [
+        subprocess.run(
+            [sys.executable, "-c", script], cwd=root, capture_output=True, check=True
+        ).stdout
+        for _ in range(2)
+    ]
+    assert renders[0] and renders[0] == renders[1]

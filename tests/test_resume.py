@@ -54,6 +54,59 @@ def test_bfs_resume_matches_uninterrupted(spark):
     docs_df.unpersist()
 
 
+def test_scheduler_resume_matches_uninterrupted(spark):
+    """Scheduler mode resumes exactly-once too: crash after the epoch-3
+    commit, resume with a fresh engine, and the crawl order and dead-letter
+    set equal the simulator's uninterrupted run (the frontier-oracle
+    scheduler config: robots, a 2^16-bit Bloom prefilter, retries)."""
+    from link_profiler_repo_spark.oracle_sim import simulate_scheduler
+    from link_profiler_repo_spark.synth import robots_rows, robots_spark
+
+    p = SynthParams(n_docs=120, n_hosts=8)
+    cfg = CrawlConfig(
+        job_id="sched-resume", max_depth=3, max_pages=60, host_budget=2,
+        epoch_seconds=2.0, max_retries=1,
+    )
+    docs, seeds = build_fixture(p, n_seeds=4)
+    expected = simulate_scheduler(docs, seeds, cfg, p, robots_rows=robots_rows(p))
+    docs_df = synth_docs_spark(spark, p).persist()
+    docs_df.count()
+    robots_df = robots_spark(spark, p)
+
+    def engine(wd):
+        return CrawlEngine(
+            spark, cfg, docs_df, wd, synth_params=p, robots_df=robots_df,
+            bloom_bits=1 << 16, metrics_enabled=False,
+        )
+
+    wd = tempfile.mkdtemp()
+    eng = engine(wd)
+    original_commit = eng.store.commit
+
+    def crashing_commit(meta):
+        original_commit(meta)
+        if meta["epoch"] == 3:
+            raise _StopAfter()
+
+    eng.store.commit = crashing_commit
+    try:
+        eng.run_scheduler(seeds)
+        raise AssertionError("expected simulated crash")
+    except _StopAfter:
+        pass
+
+    out = engine(wd).run_scheduler(seeds, resume=True)
+    got = [
+        (int(r["crawl_order"]), r["url"], int(r["depth"]))
+        for r in out["seen"].orderBy("crawl_order").select("crawl_order", "url", "depth").collect()
+    ]
+    assert got == expected.order
+    assert {(r["url"], int(r["retries"])) for r in out["dead_letter"].collect()} == set(
+        expected.dead_letter
+    )
+    docs_df.unpersist()
+
+
 def test_pause_and_cancel_job_control(spark):
     """Pause/cancel polled at epoch boundaries (job_coordinator.py:282-369):
     'paused' stops after the last committed epoch and a resume completes the
