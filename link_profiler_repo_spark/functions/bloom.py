@@ -3,7 +3,7 @@ URL-seen set as state tables).
 
 The EXACT layer is the left-anti join against the `seen` table keyed by
 sha2(canonical_url, 256) — required because final-seen-set equality with the
-reference is part of the contract (SURVEY §4.2). The Bloom sidecar is a
+reference is part of the contract (SURVEY §4.2). The Bloom filter is a
 PREFILTER: candidates whose hash is definitely absent skip the anti-join
 shuffle entirely; possible-positives fall through to the exact join.
 
@@ -13,10 +13,10 @@ uint64 arithmetic — no per-row Python anywhere. Building runs distributed as
 per-partition partial bitmaps OR-reduced on the driver (each partial is a
 fixed m/8-byte array, independent of row count).
 
-At the 10^10 design point the single bitmap becomes a per-bucket sidecar table
-(bucket = url_hash prefix) so each probe task loads only its buckets; the
-sizing knob is m_bits (default 2^23 ≈ 1 MiB ~ 0.5M URLs at ~1% fpp; scale m
-with expected |seen|).
+At the 10^10 design point the single bitmap becomes a bucketed table
+(functions/sidecar.py; bucket = pmod(xx64, n_buckets)) so each probe task
+loads only its buckets; the sizing knob is m_bits (default 2^23 ≈ 1 MiB
+~ 0.5M URLs at ~1% fpp; scale m with expected |seen|).
 """
 
 from __future__ import annotations

@@ -24,20 +24,24 @@ from pyspark.sql import types as T
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     """createDataFrame for a small driver-side row list via the Arrow/pandas
     path (no Python RDD workers). `schema` is a DDL string or StructType;
-    empty row lists fall back to the classic path (Arrow needs a batch)."""
+    empty row lists fall back to the classic path (Arrow needs a batch).
+    Like the list path, a row of the wrong arity or a None in a non-nullable
+    field raises ValueError."""
     rows = list(rows)
     if not rows:
         return spark.createDataFrame(rows, schema)
-    st = T._parse_datatype_string(schema) if isinstance(schema, str) else schema
+    st = T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
     names = st.names
+    if isinstance(rows[0], dict):
+        rows = [tuple(r.get(n) for n in names) for r in rows]
+    for r in rows:
+        if len(r) != len(names):
+            raise ValueError(f"row {r!r} has {len(r)} fields, schema has {len(names)}")
+    for i, f in enumerate(st.fields):
+        if not f.nullable and any(r[i] is None for r in rows):
+            raise ValueError(f"field {f.name!r} is not nullable but a row holds None")
     # object-dtype columns: keep raw Python values (ints stay ints, None
     # stays None) so Arrow applies the declared schema without pandas' numpy
     # inference in the middle
-    if isinstance(rows[0], dict):
-        data = {n: pd.Series([r.get(n) for r in rows], dtype=object) for n in names}
-    else:
-        data = {
-            n: pd.Series([r[i] for r in rows], dtype=object)
-            for i, n in enumerate(names)
-        }
+    data = {n: pd.Series([r[i] for r in rows], dtype=object) for i, n in enumerate(names)}
     return spark.createDataFrame(pd.DataFrame(data), st)

@@ -31,7 +31,8 @@ Admission: inbound-link count, robots disallow + domain filters
 (robots_parser.py semantics), anti-join vs the `enqueued` set, W4 priority,
 retry demotion + dead-letter (:182-192), unioned with the leftover frontier.
 
-The seen anti-join is hash-partitioned with a Bloom/cuckoo prefilter, the
+The seen anti-join is hash-partitioned with a Bloom/cuckoo prefilter (one
+broadcast bitmap, or a bucketed table from functions/sidecar.py), the
 dense ordering index uses range-partition + per-partition offsets (no global
 window), and skew from hot hosts rides on AQE skew-join handling.
 """
@@ -53,6 +54,7 @@ from ..config import CrawlConfig
 from ..functions.bloom import add_to_bloom, might_contain_udf
 from ..functions.extract import with_links
 from ..functions.localdf import local_df
+from ..functions.sidecar import Sidecar
 from ..functions.urls import canonicalize, url_host, url_sha256
 from ..state import StateStore
 from ..synth import SynthParams
@@ -128,9 +130,8 @@ class CrawlEngine:
         workdir: str,
         synth_params: SynthParams | None = None,
         robots_df: DataFrame | None = None,
-        use_bloom: bool = True,
+        prefilter: str | None = "single",
         bloom_bits: int = 1 << 23,
-        bloom_layout: str = "single",
         bloom_buckets: int = 64,
         canonical_mode: str = "identity",
         compact_every: int = 0,
@@ -140,29 +141,30 @@ class CrawlEngine:
         docs_layout: str = "inmem",
         docs_buckets: int = 32,
     ):
+        if prefilter not in (None, "single", "sidecar", "cuckoo"):
+            raise ValueError(
+                f"prefilter={prefilter!r}: expected None, 'single', 'sidecar' or 'cuckoo'"
+            )
         self.spark = spark
         self.cfg = cfg
         self.p = synth_params or SynthParams()
         self.docs = docs_df
         self.robots = robots_df
         self.store = StateStore(workdir, cfg.job_id)
-        self.use_bloom = use_bloom
+        # None: exact anti-join only. 'single': one broadcast bitmap of
+        # bloom_bits (fine to ~10^8 seen). 'sidecar' / 'cuckoo': a table of
+        # bloom_buckets Bloom / cuckoo filters sharing bloom_bits, whose probe
+        # tasks load only their buckets — the layout that survives 10^10;
+        # cuckoo can also DELETE (recrawl eviction).
+        self.prefilter = prefilter
         self.bloom_bits = bloom_bits
-        # 'single': one broadcast bitmap (fine to ~10^8 seen). 'sidecar':
-        # bucket-partitioned bitmap table — each probe task loads only its
-        # bucket's files; the layout that survives 10^10 (bloom_sidecar.py).
-        # 'cuckoo': bucket-partitioned cuckoo-filter table — same pruned-probe
-        # discipline, plus DELETE (recrawl eviction; cuckoo_sidecar.py).
-        self.bloom_layout = bloom_layout
-        self.bloom_buckets = bloom_buckets
-        self._sidecar_path = os.path.join(self.store.dir, "bloom_sidecar")
-        self._sidecar_mbits = max(64, bloom_bits // max(bloom_buckets, 1))
-        self._cuckoo_path = os.path.join(self.store.dir, "cuckoo_sidecar")
-        # slots sized to the same key budget the bitmap was sized for
-        # (bloom_bits/16 keys at ~1% fpp) held at <= 50% cuckoo load; /4
-        # must stay a power of two, so round down.
-        per_bucket = max(4096, bloom_bits // 8 // max(bloom_buckets, 1))
-        self._cuckoo_slots = 1 << (per_bucket.bit_length() - 1)
+        self._sidecar = None
+        if prefilter in ("sidecar", "cuckoo"):
+            self._sidecar = Sidecar(
+                os.path.join(self.store.dir, "prefilter"),
+                "bloom" if prefilter == "sidecar" else "cuckoo",
+                bloom_buckets, bloom_bits,
+            )
         self.canonical_mode = canonical_mode
         # fold seen/edges deltas every k epochs (0 = off); Iceberg snapshot
         # compaction equivalent — keeps the per-wave delta-union scan bounded
@@ -346,21 +348,9 @@ class CrawlEngine:
             return df
         seen_keys = seen.select("url_hash")
         flagged = None
-        if self.use_bloom and self.bloom_layout == "sidecar" and os.path.isdir(self._sidecar_path):
-            from ..functions import bloom_sidecar
-
-            flagged = bloom_sidecar.probe(
-                df, "xx64", self._sidecar_path,
-                n_buckets=self.bloom_buckets, m_bits=self._sidecar_mbits,
-            )
-        elif self.use_bloom and self.bloom_layout == "cuckoo" and os.path.isdir(self._cuckoo_path):
-            from ..functions import cuckoo_sidecar
-
-            flagged = cuckoo_sidecar.probe(
-                df, "xx64", self._cuckoo_path,
-                n_buckets=self.bloom_buckets, slots_per_bucket=self._cuckoo_slots,
-            )
-        elif bloom is not None and self.use_bloom:
+        if self._sidecar is not None and self._sidecar.live():
+            flagged = self._sidecar.probe(df)
+        elif bloom is not None:
             probe = might_contain_udf(bloom, self.bloom_bits, spark=self.spark)
             flagged = df.withColumn("_maybe", probe(F.col("xx64")))
         if flagged is not None:
@@ -374,41 +364,22 @@ class CrawlEngine:
         return df.join(seen_keys, "url_hash", "left_anti")
 
     def _bloom_insert(self, bloom: np.ndarray | None, df: DataFrame) -> np.ndarray | None:
-        """Insert df's xx64 keys into the active bloom layout; returns the
-        updated single bitmap (sidecar state lives on disk)."""
-        if not self.use_bloom:
-            return bloom
-        if self.bloom_layout == "sidecar":
-            from ..functions import bloom_sidecar
-
-            bloom_sidecar.append_delta(
-                df.select("xx64"), "xx64", self._sidecar_path,
-                n_buckets=self.bloom_buckets, m_bits=self._sidecar_mbits,
-            )
-            return bloom
-        if self.bloom_layout == "cuckoo":
-            from ..functions import cuckoo_sidecar
-
-            cuckoo_sidecar.update(
-                self.spark, self._cuckoo_path, inserts=df.select("xx64"),
-                n_buckets=self.bloom_buckets, slots_per_bucket=self._cuckoo_slots,
-            )
-            return bloom
-        return add_to_bloom(bloom, df, "xx64", self.bloom_bits)
+        """Insert df's xx64 keys into the active prefilter; returns the
+        updated single bitmap (a bucketed table lives on disk)."""
+        if self._sidecar is not None:
+            self._sidecar.update(df.select("xx64"))
+        elif self.prefilter == "single":
+            bloom = add_to_bloom(bloom, df, "xx64", self.bloom_bits)
+        return bloom
 
     def evict_seen_prefilter(self, df: DataFrame) -> None:
         """Recrawl eviction (operators/recrawl.py composition): remove url
         keys from the cuckoo prefilter so re-admitted URLs flow through the
         sure-new fast path again. Only the cuckoo layout can forget; callers
         must also retire the rows from the exact seen table."""
-        if self.bloom_layout != "cuckoo":
-            raise ValueError("prefilter eviction requires bloom_layout='cuckoo'")
-        from ..functions import cuckoo_sidecar
-
-        cuckoo_sidecar.update(
-            self.spark, self._cuckoo_path, inserts=None, deletes=df.select("xx64"),
-            n_buckets=self.bloom_buckets, slots_per_bucket=self._cuckoo_slots,
-        )
+        if self.prefilter != "cuckoo":
+            raise ValueError("prefilter eviction requires prefilter='cuckoo'")
+        self._sidecar.update(None, deletes=df.select("xx64"))
 
     def readmit(self, urls: DataFrame, depth: int | None = None) -> int:
         """Recrawl readmission — the operators/recrawl.py composition made a
@@ -423,7 +394,7 @@ class CrawlEngine:
              fast path again (cuckoo only; bloom/single layouts cannot
              forget — retired keys stay prefilter-positive and merely pay
              the exact anti-join, which now admits them: semantics identical,
-             speed degraded, documented in cuckoo_sidecar.py),
+             speed degraded),
           3. write them as the current frontier epoch (unioned with any
              leftover frontier, wave_seq re-densified) and re-commit the
              checkpoint, so run_bfs(resume=True) re-fetches them with fresh
@@ -468,7 +439,7 @@ class CrawlEngine:
         keyed_urls.write.parquet(snap_dir)
         keyed = spark.read.parquet(snap_dir)
         store.retire(spark, "seen", keyed, key_col="url_hash")
-        if self.bloom_layout == "cuckoo" and os.path.isdir(self._cuckoo_path):
+        if self.prefilter == "cuckoo" and self._sidecar.live():
             self.evict_seen_prefilter(keyed)
 
         leftover = store.read_epoch(spark, "frontier", epoch)
@@ -566,7 +537,7 @@ class CrawlEngine:
             self._step(epoch, "resume")
             mode.resume(ckpt)
             frontier = store.read_epoch(spark, mode.table, epoch)
-            bloom = store.read_bloom(epoch) if self.use_bloom else None
+            bloom = store.read_bloom(epoch) if self.prefilter == "single" else None
         else:
             store.reset()  # a fresh run must not inherit prior generations
             epoch = 0
@@ -577,7 +548,7 @@ class CrawlEngine:
             bloom = mode.seed_prefilter(
                 frontier,
                 np.zeros(self.bloom_bits // 8, dtype=np.uint8)
-                if self.use_bloom and self.bloom_layout == "single"
+                if self.prefilter == "single"
                 else None,
             )
             if bloom is not None:

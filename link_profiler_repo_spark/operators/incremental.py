@@ -34,6 +34,7 @@ algorithm whose fixpoint the incremental fold must hit exactly.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
 
@@ -109,8 +110,14 @@ def merge_counters_many(
     of bigints are associative — but it costs one exchange total instead of
     one full-outer join per merge (measured: the 3-batch incremental gate
     fold dropped a third of its jobs). Column order: first appearance
-    across `parts`, the same order the chained merge produces."""
+    across `parts`, the same order the chained merge produces. Exact only
+    for integral counters (a float sum depends on the fold order), so any
+    other counter type raises TypeError."""
     parts = [p for p in parts if p is not None]
+    for p in parts:
+        for f in p.schema.fields:
+            if f.name != key_col and not isinstance(f.dataType, T.IntegralType):
+                raise TypeError(f"counter {f.name!r} is {f.dataType.simpleString()}, not integral")
     if len(parts) == 1:
         return parts[0]
     cols: list[str] = []

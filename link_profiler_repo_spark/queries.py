@@ -1162,7 +1162,7 @@ def _crawl_outputs(spark, n_docs=80, n_hosts=6, max_depth=3, max_pages=60):
     docs_df = synth_docs_spark(spark, p).persist()
     eng = CrawlEngine(
         spark, cfg, docs_df, tempfile.mkdtemp(prefix="sparkfrontier_"),
-        synth_params=p, use_bloom=False,
+        synth_params=p, prefilter=None,
     )
     seeds = [u for _, u, _ in default_seeds(p, 2)]
     out = eng.run_bfs(seeds)
@@ -1599,7 +1599,7 @@ def q_crawl_scheduler_order(spark, sf_dir):
     docs_df = synth_docs_spark(spark, p).persist()
     eng = CrawlEngine(
         spark, cfg, docs_df, tempfile.mkdtemp(prefix="sparkfrontier_"),
-        synth_params=p, robots_df=robots_spark(spark, p), use_bloom=False,
+        synth_params=p, robots_df=robots_spark(spark, p), prefilter=None,
     )
     seeds = [u for _, u, _ in default_seeds(p, 3)]
     expected = simulate_scheduler(

@@ -15,7 +15,9 @@ an Iceberg table with `epoch` as a partition/snapshot dimension):
     edges/epoch=N/      append delta of link-graph edges
     metrics/epoch=N/    per-partition stage counters (lineage, north_rule)
     dead_letter/epoch=N/
-    bloom_epoch{N}.npy  Bloom sidecar bitmap (prefilter for the seen anti-join)
+    bloom_epoch{N}.npy  single-bitmap Bloom prefilter for the seen anti-join
+                        (prefilter='single'; the bucketed 'sidecar' and
+                        'cuckoo' layouts live in prefilter/, functions/sidecar.py)
     _checkpoint.json    {"epoch": N, "crawled": c, ...} — written tmp+rename
 
 Reading `seen` uses directory-partition discovery so the epoch filter is
@@ -32,6 +34,23 @@ import tempfile
 import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+
+
+def read_pointer(path: str) -> int | None:
+    """The generation a pointer file names; None if it was never written."""
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return int(f.read().strip() or 0)
+
+
+def write_pointer(path: str, g: int) -> None:
+    """Atomically point `path` at generation g (tmp file + rename): the
+    single commit point of a generation swap."""
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".gen.tmp")
+    with os.fdopen(fd, "w") as f:
+        f.write(str(g))
+    os.replace(tmp, path)
 
 
 class StateStore:
@@ -120,17 +139,10 @@ class StateStore:
         return os.path.join(self.dir, f"_{table}.gen")
 
     def _gen(self, table: str) -> int:
-        p = self._gen_path(table)
-        if not os.path.exists(p):
-            return 0
-        with open(p) as f:
-            return int(f.read().strip() or 0)
+        return read_pointer(self._gen_path(table)) or 0
 
     def _set_gen(self, table: str, g: int) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.dir, suffix=".gen.tmp")
-        with os.fdopen(fd, "w") as f:
-            f.write(str(g))
-        os.replace(tmp, self._gen_path(table))
+        write_pointer(self._gen_path(table), g)
 
     def _table_dir(self, table: str, gen: int | None = None) -> str:
         g = self._gen(table) if gen is None else gen
@@ -226,7 +238,7 @@ class StateStore:
         for g in range(new_gen):
             shutil.rmtree(self._table_dir(table, g), ignore_errors=True)
 
-    # -- bloom sidecar ---------------------------------------------------------
+    # -- single-bitmap Bloom prefilter -------------------------------------------
     def write_bloom(self, epoch: int, bitmap: np.ndarray) -> str:
         path = os.path.join(self.dir, f"bloom_epoch{epoch}.npy")
         np.save(path, bitmap)

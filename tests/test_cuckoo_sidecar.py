@@ -1,54 +1,34 @@
-"""Per-bucket cuckoo-filter sidecar (functions/cuckoo_sidecar.py): the
-no-false-negative invariant under interleaved insert/delete epochs, deletion
-semantics (the capability Bloom lacks), stash bound at the design load,
-bucket-pruned probes, untouched-bucket carry-over across updates, and
-end-to-end crawl oracle equality with bloom_layout='cuckoo'."""
+"""Cuckoo kernel of the bucketed prefilter table (functions/sidecar.py):
+deletion semantics (the capability Bloom lacks), the no-false-negative
+invariant under interleaved insert/delete epochs, the stash bound at the
+design load, and the engine's eviction path. Properties shared with the
+Bloom kernel are in tests/test_sidecar.py."""
 
-import os
-import shutil
-import tempfile
-
-import numpy as np
 import pyspark.sql.functions as F
 
-from link_profiler_repo_spark.functions import cuckoo_sidecar
+from link_profiler_repo_spark.functions.sidecar import Sidecar
 
 N_BUCKETS = 8
-SLOTS = 1 << 12  # 1024 inner buckets x 4 slots per outer bucket
+BITS = N_BUCKETS << 15  # 4096 slots (1024 inner buckets x 4) per outer bucket
 
 
 def _keys(spark, lo, hi):
     return spark.range(lo, hi).select(F.xxhash64(F.col("id").cast("string")).alias("xx64"))
 
 
-def _probe_map(spark, path, lo, hi):
-    rows = cuckoo_sidecar.probe(
-        _keys(spark, lo, hi), "xx64", path, N_BUCKETS, SLOTS
-    ).collect()
-    return {r["xx64"]: r["_maybe"] for r in rows}
+def _cuckoo(tmp_path):
+    return Sidecar(str(tmp_path / "cuckoo"), "cuckoo", N_BUCKETS, BITS)
 
 
-def test_no_false_negatives_and_low_fp(spark, tmp_path):
-    path = str(tmp_path / "cuckoo")
-    cuckoo_sidecar.update(spark, path, _keys(spark, 0, 2000), n_buckets=N_BUCKETS, slots_per_bucket=SLOTS)
-    cuckoo_sidecar.update(spark, path, _keys(spark, 2000, 3000), n_buckets=N_BUCKETS, slots_per_bucket=SLOTS)
-    got = _probe_map(spark, path, 0, 6000)
-    member = {r["xx64"] for r in _keys(spark, 0, 3000).collect()}
-    fn = sum(1 for k, m in got.items() if k in member and not m)
-    fp = sum(1 for k, m in got.items() if k not in member and m)
-    assert fn == 0, "cuckoo false negative — contract violation"
-    # 16-bit fingerprints: fpp ~ 8*2/65535; allow generous slack on 3000 trials
-    assert fp <= 10, f"fp rate implausibly high: {fp}"
+def _probe_map(spark, sc, lo, hi):
+    return {r["xx64"]: r["_maybe"] for r in sc.probe(_keys(spark, lo, hi)).collect()}
 
 
 def test_delete_forgets_only_the_deleted(spark, tmp_path):
-    path = str(tmp_path / "cuckoo")
-    cuckoo_sidecar.update(spark, path, _keys(spark, 0, 3000), n_buckets=N_BUCKETS, slots_per_bucket=SLOTS)
-    cuckoo_sidecar.update(
-        spark, path, inserts=None, deletes=_keys(spark, 0, 1500),
-        n_buckets=N_BUCKETS, slots_per_bucket=SLOTS,
-    )
-    got = _probe_map(spark, path, 0, 3000)
+    sc = _cuckoo(tmp_path)
+    sc.update(_keys(spark, 0, 3000))
+    sc.update(None, deletes=_keys(spark, 0, 1500))
+    got = _probe_map(spark, sc, 0, 3000)
     kept = {r["xx64"] for r in _keys(spark, 1500, 3000).collect()}
     deleted = {r["xx64"] for r in _keys(spark, 0, 1500).collect()} - kept
     fn = sum(1 for k in kept if not got[k])
@@ -62,91 +42,32 @@ def test_delete_forgets_only_the_deleted(spark, tmp_path):
 def test_interleaved_ops_match_set_model(spark, tmp_path):
     """Property: after any insert/delete epoch sequence (deletes only of
     live inserted keys), every live key is maybe-present."""
-    path = str(tmp_path / "cuckoo")
+    sc = _cuckoo(tmp_path)
     live: set[int] = set()
     rng_ranges = [(0, 800, None), (800, 1600, (0, 400)), (1600, 2400, (800, 1200)), (2400, 2600, (1600, 2000))]
     for lo, hi, dele in rng_ranges:
         ins = _keys(spark, lo, hi)
         dels = _keys(spark, *dele) if dele else None
-        cuckoo_sidecar.update(spark, path, ins, dels, n_buckets=N_BUCKETS, slots_per_bucket=SLOTS)
+        sc.update(ins, dels)
         live |= {r["xx64"] for r in ins.collect()}
         if dels is not None:
             live -= {r["xx64"] for r in dels.collect()}
-    got = _probe_map(spark, path, 0, 2600)
+    got = _probe_map(spark, sc, 0, 2600)
     assert all(got[k] for k in live), "live key lost"
 
 
 def test_stash_stays_empty_at_design_load(spark, tmp_path):
     """Two-choice placement without eviction must not overflow at the <= 50%
     load the sizing targets: 8 buckets x 4096 slots = 32768 slots; insert
-    16000 keys and require a near-empty stash."""
-    path = str(tmp_path / "cuckoo")
-    cuckoo_sidecar.update(spark, path, _keys(spark, 0, 16000), n_buckets=N_BUCKETS, slots_per_bucket=SLOTS)
-    rows = spark.read.parquet(path).select("stash").collect()
-    stashed = sum(len(r["stash"]) // 8 for r in rows)
+    16000 keys and require a near-empty stash (the state bytes past the
+    table)."""
+    sc = _cuckoo(tmp_path)
+    sc.update(_keys(spark, 0, 16000))
+    rows = spark.read.parquet(sc.live()).select("state").collect()
+    stashed = sum(len(r["state"]) - sc.kernel.nbytes for r in rows) // 8
     assert stashed <= 16, f"stash holds {stashed} keys at 50% load"
-    got = _probe_map(spark, path, 0, 16000)
+    got = _probe_map(spark, sc, 0, 16000)
     assert all(got.values())
-
-
-def test_probe_reads_only_its_bucket(spark, tmp_path):
-    path = str(tmp_path / "cuckoo")
-    all_keys = _keys(spark, 0, 4000).persist()
-    cuckoo_sidecar.update(spark, path, all_keys, n_buckets=N_BUCKETS, slots_per_bucket=SLOTS)
-    keep = 3
-    for d in os.listdir(path):
-        if d.startswith("bucket=") and d != f"bucket={keep}":
-            shutil.rmtree(os.path.join(path, d))
-    in_bucket = all_keys.filter(F.pmod(F.col("xx64"), F.lit(N_BUCKETS)) == keep)
-    got = cuckoo_sidecar.probe(in_bucket, "xx64", path, N_BUCKETS, SLOTS).collect()
-    assert got and all(r["_maybe"] for r in got)
-    other = cuckoo_sidecar.probe(
-        all_keys.filter(F.pmod(F.col("xx64"), F.lit(N_BUCKETS)) == (keep + 1) % N_BUCKETS),
-        "xx64", path, N_BUCKETS, SLOTS,
-    ).collect()
-    assert all(not r["_maybe"] for r in other)
-    all_keys.unpersist()
-
-
-def test_untouched_buckets_carry_over(spark, tmp_path):
-    """Epoch 2 touches a strict subset of outer buckets; epoch-1 keys in the
-    untouched buckets must survive the atomic layout swap."""
-    path = str(tmp_path / "cuckoo")
-    first = _keys(spark, 0, 2000).persist()
-    cuckoo_sidecar.update(spark, path, first, n_buckets=N_BUCKETS, slots_per_bucket=SLOTS)
-    only_b0 = _keys(spark, 2000, 4000).filter(F.pmod(F.col("xx64"), F.lit(N_BUCKETS)) == 0)
-    cuckoo_sidecar.update(spark, path, only_b0, n_buckets=N_BUCKETS, slots_per_bucket=SLOTS)
-    got = _probe_map(spark, path, 0, 2000)
-    assert all(got.values()), "carry-over lost untouched buckets"
-    first.unpersist()
-
-
-def test_bfs_with_cuckoo_matches_oracle(spark):
-    from link_profiler_repo_spark.config import CrawlConfig
-    from link_profiler_repo_spark.operators.crawl import CrawlEngine
-    from link_profiler_repo_spark.oracle_sim import build_fixture, simulate_bfs
-    from link_profiler_repo_spark.synth import SynthParams, synth_docs_spark
-
-    p = SynthParams(n_docs=100, n_hosts=6)
-    cfg = CrawlConfig(job_id="cuckoo-bfs", max_depth=3, max_pages=300)
-    docs, seeds = build_fixture(p, n_seeds=2)
-    expected = simulate_bfs(docs, seeds, cfg, p)
-    docs_df = synth_docs_spark(spark, p).persist()
-    docs_df.count()
-    eng = CrawlEngine(
-        spark, cfg, docs_df, tempfile.mkdtemp(), synth_params=p,
-        use_bloom=True, bloom_layout="cuckoo", bloom_buckets=8,
-        bloom_bits=1 << 16, metrics_enabled=False,
-    )
-    out = eng.run_bfs(seeds)
-    got = [
-        (int(r["crawl_order"]), r["url"], int(r["depth"]))
-        for r in out["seen"].orderBy("crawl_order").select("crawl_order", "url", "depth").collect()
-    ]
-    assert got == expected.order
-    assert {u for _, u, _ in got} == expected.seen
-    assert os.path.isdir(eng._cuckoo_path)
-    docs_df.unpersist()
 
 
 def test_engine_eviction_roundtrip(spark, tmp_path):
@@ -161,15 +82,15 @@ def test_engine_eviction_roundtrip(spark, tmp_path):
     docs_df = synth_docs_spark(spark, p)
     eng = CrawlEngine(
         spark, cfg, docs_df, str(tmp_path / "wd"), synth_params=p,
-        use_bloom=True, bloom_layout="cuckoo", bloom_buckets=8,
-        bloom_bits=1 << 16, metrics_enabled=False,
+        prefilter="cuckoo", bloom_buckets=8, bloom_bits=1 << 16, metrics_enabled=False,
     )
-    keys = spark.range(0, 500).select(F.xxhash64(F.col("id").cast("string")).alias("xx64"))
-    eng._bloom_insert(None, keys)
-    evict = keys.limit(200)
+    keys = _keys(spark, 0, 500)
+    evict = keys.filter(F.pmod(F.col("xx64"), F.lit(5)) < 2)  # ~40%, deterministic
+    eng._sidecar.update(keys)
     eng.evict_seen_prefilter(evict)
-    probed = cuckoo_sidecar.probe(keys, "xx64", eng._cuckoo_path, 8, eng._cuckoo_slots).collect()
+    probed = eng._sidecar.probe(keys).collect()
     evicted = {r["xx64"] for r in evict.collect()}
+    assert 100 < len(evicted) < 300
     live_missing = [r for r in probed if r["xx64"] not in evicted and not r["_maybe"]]
     gone = sum(1 for r in probed if r["xx64"] in evicted and not r["_maybe"])
     assert not live_missing

@@ -24,7 +24,7 @@ def test_bucketed_seen_layout_matches_oracle(spark):
     docs_df = synth_docs_spark(spark, P).persist()
     eng = CrawlEngine(
         spark, CFG_B, docs_df, tempfile.mkdtemp(), synth_params=P,
-        use_bloom=False, seen_layout="bucketed", metrics_enabled=False,
+        prefilter=None, seen_layout="bucketed", metrics_enabled=False,
     )
     try:
         out = eng.run_bfs(seeds)
@@ -44,7 +44,7 @@ def test_bucketed_docs_layout_matches_oracle(spark):
     docs_df = synth_docs_spark(spark, P).persist()
     eng = CrawlEngine(
         spark, cfg, docs_df, tempfile.mkdtemp(), synth_params=P,
-        use_bloom=False, docs_layout="bucketed", metrics_enabled=False,
+        prefilter=None, docs_layout="bucketed", metrics_enabled=False,
     )
     try:
         out = eng.run_bfs(seeds)
@@ -65,7 +65,7 @@ def test_broadcast_fetch_join_matches_oracle(spark):
     docs_df = synth_docs_spark(spark, P).persist()
     eng = CrawlEngine(
         spark, cfg, docs_df, tempfile.mkdtemp(), synth_params=P,
-        use_bloom=False, corpus_broadcast_ratio=0, metrics_enabled=False,
+        prefilter=None, corpus_broadcast_ratio=0, metrics_enabled=False,
     )
     out = eng.run_bfs(seeds)
     assert _order(out) == expected.order
@@ -79,7 +79,7 @@ def test_compaction_matches_oracle(spark):
     docs_df = synth_docs_spark(spark, P).persist()
     eng = CrawlEngine(
         spark, CFG_C, docs_df, tempfile.mkdtemp(), synth_params=P,
-        use_bloom=False, compact_every=2, metrics_enabled=False,
+        prefilter=None, compact_every=2, metrics_enabled=False,
     )
     out = eng.run_bfs(seeds)
     assert _order(out) == expected.order

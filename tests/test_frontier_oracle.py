@@ -113,7 +113,7 @@ def test_bfs_variants_match_oracle(spark, docs_df, tmp_workdir, cfg, n_seeds):
     docs, seeds = build_fixture(P, n_seeds=n_seeds)
     expected = simulate_bfs(docs, seeds, cfg, P)
     eng = CrawlEngine(
-        spark, cfg, docs_df, tmp_workdir, synth_params=P, use_bloom=False,
+        spark, cfg, docs_df, tmp_workdir, synth_params=P, prefilter=None,
         metrics_enabled=False,
     )
     out = eng.run_bfs(seeds)
@@ -187,7 +187,7 @@ def test_scheduler_sitemap_seeding_matches_oracle(spark, docs_df):
     eng = CrawlEngine(
         spark, cfg, docs_df, tempfile.mkdtemp(), synth_params=P,
         robots_df=spark.createDataFrame(rr, schema=ROBOTS),
-        use_bloom=False, metrics_enabled=False,
+        prefilter=None, metrics_enabled=False,
     )
     out = eng.run_scheduler(seeds, collect_waves=True)
     assert out["waves"] == expected.waves

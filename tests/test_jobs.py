@@ -13,7 +13,7 @@ def test_full_seo_audit_composition(spark, tmp_workdir):
     cfg = CrawlConfig(job_id="audit", max_depth=2, max_pages=40)
     out = run_job(
         "full_seo_audit", spark, docs, [u for _, u, _ in default_seeds(p, 2)], cfg,
-        workdir=tmp_workdir, p=p, use_bloom=False, metrics_enabled=False,
+        workdir=tmp_workdir, p=p, prefilter=None, metrics_enabled=False,
     )
     assert out["stats"].crawled > 0
     assert out["profiles"].count() > 0
@@ -202,7 +202,7 @@ def test_run_job_dispatcher_every_type(spark, tmp_path, capsys, monkeypatch):
     cfg = CrawlConfig(job_id="smoke", max_depth=2, max_pages=40)
     res = run_job(
         "backlink_discovery", spark, docs, [u for _, u, _ in default_seeds(p, 2)],
-        cfg, workdir=str(tmp_path / "wd"), p=p, use_bloom=False,
+        cfg, workdir=str(tmp_path / "wd"), p=p, prefilter=None,
         metrics_enabled=False,
     )
     edges_p, seen_p = str(tmp_path / "edges.pq"), str(tmp_path / "seen.pq")
@@ -254,7 +254,7 @@ def test_zero_edge_crawl_flows_through_empty(spark, tmp_path):
     cfg = CrawlConfig(job_id="zero", max_depth=2, max_pages=10)
     res = run_job(
         "full_seo_audit", spark, docs, [], cfg,
-        workdir=str(tmp_path / "wd0"), p=p, use_bloom=False, metrics_enabled=False,
+        workdir=str(tmp_path / "wd0"), p=p, prefilter=None, metrics_enabled=False,
     )
     assert res["profiles"].count() == 0
     assert res["history"].count() == 0

@@ -46,3 +46,19 @@ def test_local_df_empty_falls_back(spark):
     df = local_df(spark, [], "k string, v long")
     assert df.count() == 0
     assert [f.name for f in df.schema.fields] == ["k", "v"]
+
+
+@pytest.mark.parametrize(
+    "rows,schema",
+    [
+        ([("a", 1), ("b",)], "k string, v long"),  # short row
+        ([("a", 1, 2)], "k string, v long"),  # long row
+        ([("a", None)], "k string, v long NOT NULL"),  # None in a non-nullable field
+        ([{"k": "a"}], "k string, v long NOT NULL"),  # dict row missing that field
+    ],
+)
+def test_local_df_rejects_rows_the_list_path_rejects(spark, rows, schema):
+    with pytest.raises(ValueError):
+        spark.createDataFrame(rows, schema)
+    with pytest.raises(ValueError):
+        local_df(spark, rows, schema)

@@ -24,7 +24,7 @@ def _run_engine(spark, wd, docs_df, max_pages=400):
     cfg = CrawlConfig(job_id="readmit", max_depth=3, max_pages=max_pages)
     return CrawlEngine(
         spark, cfg, docs_df, wd, synth_params=P,
-        use_bloom=True, bloom_layout="cuckoo", bloom_buckets=8,
+        prefilter="cuckoo", bloom_buckets=8,
         bloom_bits=1 << 16, metrics_enabled=False,
     )
 

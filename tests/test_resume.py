@@ -117,14 +117,14 @@ def test_pause_and_cancel_job_control(spark):
     docs_df.count()
 
     wd = tempfile.mkdtemp()
-    eng = CrawlEngine(spark, CFG, docs_df, wd, synth_params=P, use_bloom=False, metrics_enabled=False)
+    eng = CrawlEngine(spark, CFG, docs_df, wd, synth_params=P, prefilter=None, metrics_enabled=False)
     eng.store.write_control("paused")
     out = eng.run_bfs(seeds)
     assert eng.stats.stopped == "paused"
     assert eng.stats.crawled == 0  # paused before the first epoch ran
 
     # resume after un-pausing: identical final state
-    eng2 = CrawlEngine(spark, CFG, docs_df, wd, synth_params=P, use_bloom=False, metrics_enabled=False)
+    eng2 = CrawlEngine(spark, CFG, docs_df, wd, synth_params=P, prefilter=None, metrics_enabled=False)
     eng2.store.write_control("running")
     out = eng2.run_bfs(seeds, resume=True)
     got = [
@@ -135,7 +135,7 @@ def test_pause_and_cancel_job_control(spark):
 
     # cancel is honored the same way
     wd2 = tempfile.mkdtemp()
-    eng3 = CrawlEngine(spark, CFG, docs_df, wd2, synth_params=P, use_bloom=False, metrics_enabled=False)
+    eng3 = CrawlEngine(spark, CFG, docs_df, wd2, synth_params=P, prefilter=None, metrics_enabled=False)
     eng3.store.write_control("cancelled")
     eng3.run_bfs(seeds)
     assert eng3.stats.stopped == "cancelled"
@@ -225,7 +225,7 @@ def test_fresh_run_ignores_prior_state(spark, tmp_path):
     def run():
         eng = CrawlEngine(
             spark, cfg, docs_df, workdir, synth_params=p,
-            use_bloom=False, compact_every=1, metrics_enabled=False,
+            prefilter=None, compact_every=1, metrics_enabled=False,
         )
         out = eng.run_bfs(seeds)
         return [

@@ -14,6 +14,7 @@ import pytest
 from link_profiler_repo_spark.operators.incremental import (
     fold_profile_batch,
     merge_counters,
+    merge_counters_many,
 )
 from link_profiler_repo_spark.operators.sampling import (
     SCALE,
@@ -249,6 +250,18 @@ def test_merge_counters_column_union(spark):
     got = {r.key: (r.x, r.y) for r in merge_counters(a, b, "key").collect()}
     # missing counters on either side read as 0, never dropped
     assert got == {1: (10, 2), 2: (0, 3)}
+
+
+def test_merge_counters_many_rejects_non_integral_counters(spark):
+    """A double sum depends on the fold order, so the one-aggregation merge
+    would not equal the chained merge: it must refuse before any job."""
+    a = spark.createDataFrame([(1, 10)], "key long, x long")
+    b = spark.createDataFrame([(1, 0.5)], "key long, y double")
+    with pytest.raises(TypeError, match="'y' is double"):
+        merge_counters_many([a, b], "key")
+    with pytest.raises(TypeError, match="'y' is double"):
+        merge_counters_many([b], "key")
+    assert merge_counters_many([a, a], "key").first().x == 20
 
 
 # ---------------------------------------------------------------------------

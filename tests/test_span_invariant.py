@@ -55,7 +55,7 @@ def test_spans_survive_engine_round_trip(spark, tmp_workdir):
     }
 
     cfg = CrawlConfig(max_depth=2, max_pages=50)
-    eng = CrawlEngine(spark, cfg, docs_df, tmp_workdir, synth_params=p, use_bloom=False, metrics_enabled=False)
+    eng = CrawlEngine(spark, cfg, docs_df, tmp_workdir, synth_params=p, prefilter=None, metrics_enabled=False)
     eng.run_bfs([u for _, u, _ in default_seeds(p, 2)])
 
     # the docs table after the run — and a projection THROUGH the extraction
