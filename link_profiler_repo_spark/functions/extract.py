@@ -31,7 +31,6 @@ posexplode (BASELINE.json input_hint).
 
 from __future__ import annotations
 
-import os
 import re
 from urllib.parse import urljoin, urlparse
 
@@ -49,12 +48,6 @@ CANONICAL_RE = re.compile(
 )
 
 LINK_TYPE_PRIORITY = ("sponsored", "ugc", "nofollow", "canonical", "redirect")
-
-# measurement toggle (bench A/B only): EXTRACT_NO_CONTEXT=1 short-circuits
-# the context_text sibling-walk so its cost is attributable; read at module
-# import so it reaches the executor-side Python workers in local mode
-_CTX_DISABLED = bool(os.environ.get("EXTRACT_NO_CONTEXT"))
-
 
 def determine_link_type(rel: list[str]) -> str:
     # reference: link_extractor.py:94-109 — order of checks is the contract
@@ -124,8 +117,7 @@ def parse_links(base_url: str, spans: list) -> list[dict]:
                     "anchor_text": anchor,
                     "rel": rel,
                     "link_type": determine_link_type(rel),
-                    "context_text": "" if _CTX_DISABLED
-                    else _context_text(text, m.start(), m.end(), anchor),
+                    "context_text": _context_text(text, m.start(), m.end(), anchor),
                     "pos": pos,
                     "from_tag": "a",
                     "first": full not in seen_hrefs,

@@ -15,7 +15,7 @@ The shell (class Sidecar) owns everything that does not depend on the filter:
           with the kernel and writes the new states into generation G+1.
           Untouched buckets carry over by hard link (the files are immutable),
           so G+1 is complete before it goes live. The commit point is ONE
-          atomic pointer bump, the discipline of StateStore.compact; older
+          atomic pointer bump, the discipline of StateStore.rewrite; older
           generations are deleted after it. A crash anywhere before the bump
           leaves G live and G+1 as garbage that the re-run overwrites; a crash
           after it leaves G+1 live.
@@ -58,6 +58,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import tempfile
 
 import numpy as np
 import pandas as pd
@@ -65,8 +66,25 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
-from ..state import read_pointer, write_pointer
 from .bloom import _positions
+
+
+def read_pointer(path: str) -> int | None:
+    """The generation a pointer file names; None if it was never written."""
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return int(f.read().strip() or 0)
+
+
+def write_pointer(path: str, g: int) -> None:
+    """Atomically point `path` at generation g (tmp file + rename): the
+    single commit point of a generation swap."""
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".gen.tmp")
+    with os.fdopen(fd, "w") as f:
+        f.write(str(g))
+    os.replace(tmp, path)
+
 
 # -- Bloom kernel -----------------------------------------------------------------
 

@@ -71,8 +71,10 @@ _LINK_FIELDS = ("anchor_text", "rel", "link_type", "context_text", "pos", "from_
 # (a 100k threshold cost 1.7x end-to-end), so it covers only genuinely tiny
 # waves (seed ramps, tails).
 SMALL_WAVE_ROWS = 2_000
-# Largest wave the in-memory fetch join broadcasts (see _fetch_join).
+# Largest wave the in-memory fetch join broadcasts, and how many times the
+# wave the corpus must outnumber for the broadcast to win (see _fetch_join).
 BROADCAST_WAVE_MAX = 2_000_000
+CORPUS_BROADCAST_RATIO = 50
 
 
 def _first_occurrence(df: DataFrame, key: str, order: F.Column) -> DataFrame:
@@ -137,7 +139,6 @@ class CrawlEngine:
         compact_every: int = 0,
         seen_layout: str = "delta",
         metrics_enabled: bool = True,
-        corpus_broadcast_ratio: int = 50,
         docs_layout: str = "inmem",
         docs_buckets: int = 32,
     ):
@@ -183,11 +184,10 @@ class CrawlEngine:
         #   docs_layout='inmem' (default): corpus is a caller-persisted
         #     DataFrame. A wave <= BROADCAST_WAVE_MAX rows is broadcast
         #     against a streamed corpus scan when the corpus outnumbers the
-        #     wave by corpus_broadcast_ratio (the regime where re-shuffling
+        #     wave by CORPUS_BROADCAST_RATIO (the regime where re-shuffling
         #     the corpus loses); comparable-size corpora (local bench: 3x
         #     the wave) measure FASTER under the plain shuffle join, so the
         #     ratio gate keeps that plan where it wins.
-        self.corpus_broadcast_ratio = corpus_broadcast_ratio
         self.docs_layout = docs_layout
         self._n_docs: int | None = None
         self._docs_table = None
@@ -302,7 +302,7 @@ class CrawlEngine:
             self._n_docs = docs.count()  # cached corpus: cheap, once per run
         if (
             n_wave > BROADCAST_WAVE_MAX
-            or self._n_docs < self.corpus_broadcast_ratio * max(n_wave, 1)
+            or self._n_docs < CORPUS_BROADCAST_RATIO * max(n_wave, 1)
         ):
             return (
                 wave.join(docs, wave["url"] == docs["doc_id"], "left")
@@ -384,21 +384,18 @@ class CrawlEngine:
     def readmit(self, urls: DataFrame, depth: int | None = None) -> int:
         """Recrawl readmission — the operators/recrawl.py composition made a
         durable engine action. Given due URLs (e.g. recrawl_schedule rows
-        whose revisit interval has elapsed):
-
-          1. retire them from the exact seen state (StateStore.retire — a
-             new state generation, the Iceberg DELETE equivalent; the
-             bucketed seen layout rebuilds from the retired deltas on
-             resume, so one retirement covers both layouts),
-          2. evict them from the cuckoo prefilter so they ride the sure-new
-             fast path again (cuckoo only; bloom/single layouts cannot
-             forget — retired keys stay prefilter-positive and merely pay
-             the exact anti-join, which now admits them: semantics identical,
-             speed degraded),
-          3. write them as the current frontier epoch (unioned with any
-             leftover frontier, wave_seq re-densified) and re-commit the
-             checkpoint, so run_bfs(resume=True) re-fetches them with fresh
-             crawl_order continuing the global counter.
+        whose revisit interval has elapsed), one StateStore.rewrite retires
+        them from the exact seen state (a new seen generation — the Iceberg
+        DELETE equivalent; the bucketed seen layout rebuilds from the seen
+        deltas on resume) and re-seeds them into the current frontier epoch
+        (a new frontier generation: leftover frontier + due URLs, wave_seq
+        re-densified). One checkpoint rename commits both, so a crash leaves
+        the crawl as it was before or after the readmission, and
+        run_bfs(resume=True) re-fetches them with fresh crawl_order
+        continuing the global counter. After the commit they are evicted
+        from the cuckoo prefilter to ride the sure-new fast path again; a
+        crash before that only costs them the exact anti-join, as on the
+        Bloom layouts, which cannot forget.
 
         By default each URL re-enters at its ORIGINAL depth (carried from the
         seen state), so the resumed expansion exactly mirrors the first crawl
@@ -416,31 +413,25 @@ class CrawlEngine:
             raise ValueError("readmit requires a checkpointed crawl to resume from")
         epoch = int(ckpt["epoch"])
 
-        # Snapshot the due-set to parquet BEFORE retiring: the natural caller
-        # derives `urls` from the seen table itself (e.g. recrawl_schedule over
-        # crawl history), so its lazy plan reads the very generation files
-        # retire() deletes — every use of `keyed` after the retire would hit
-        # FileNotFoundException on the old generation. One tiny write severs
-        # the lineage (due-sets are a sliver of the seen table by design).
+        # Snapshot the due-set first: the natural caller derives `urls` from
+        # the seen table itself (e.g. recrawl_schedule over crawl history),
+        # whose generation the commit below deletes, yet the eviction reads
+        # the keys after it. One tiny write severs that lineage and gives the
+        # retirement, the re-seed and the eviction the same rows.
         snap_dir = os.path.join(store.dir, "_readmit_keys")
         shutil.rmtree(snap_dir, ignore_errors=True)
-        keyed_urls = self._with_keys(urls.select("url").distinct())
+        seen = store.read_deltas(spark, "seen", 1 << 62)
+        keyed = self._with_keys(urls.select("url").distinct())
         if depth is None:
-            seen_depth = store.read_deltas(spark, "seen", 1 << 62).select(
-                "url_hash", "depth"
-            )
             # left join: a URL never crawled (not in seen) readmits at depth 0
-            keyed_urls = (
-                keyed_urls.join(seen_depth, "url_hash", "left")
+            keyed = (
+                keyed.join(seen.select("url_hash", "depth"), "url_hash", "left")
                 .withColumn("depth", F.coalesce(F.col("depth"), F.lit(0)))
             )
         else:
-            keyed_urls = keyed_urls.withColumn("depth", F.lit(int(depth)))
-        keyed_urls.write.parquet(snap_dir)
+            keyed = keyed.withColumn("depth", F.lit(int(depth)))
+        keyed.write.parquet(snap_dir)
         keyed = spark.read.parquet(snap_dir)
-        store.retire(spark, "seen", keyed, key_col="url_hash")
-        if self.prefilter == "cuckoo" and self._sidecar.live():
-            self.evict_seen_prefilter(keyed)
 
         leftover = store.read_epoch(spark, "frontier", epoch)
         n_left = leftover.count()
@@ -450,14 +441,13 @@ class CrawlEngine:
         merged = leftover.select(*_FRONTIER_COLS).unionByName(
             readd.select(*_FRONTIER_COLS)
         )
-        # write via a temp epoch dir, then swap: the overwrite target is the
-        # same directory the merged plan reads from (leftover's lineage)
-        tmp_epoch = -(epoch + 1)
-        store.write_epoch("frontier", tmp_epoch, merged)
-        stored = store.read_epoch(spark, "frontier", tmp_epoch)
-        store.write_epoch("frontier", epoch, stored)
-        shutil.rmtree(store._epoch_dir("frontier", tmp_epoch), ignore_errors=True)
-        store.commit({**ckpt, "readmitted": n_new})
+        tables = {"frontier": (epoch, merged)}
+        if seen is not None:  # a due-set is tiny next to seen: broadcast it
+            due = F.broadcast(keyed.select("url_hash"))
+            tables["seen"] = (0, seen.join(due, "url_hash", "left_anti"))
+        store.rewrite(tables, {**ckpt, "readmitted": n_new})
+        if self.prefilter == "cuckoo" and self._sidecar.live():
+            self.evict_seen_prefilter(keyed)
         shutil.rmtree(snap_dir, ignore_errors=True)
         return n_left + n_new
 
@@ -673,9 +663,12 @@ class CrawlEngine:
 
                 self._step(epoch, "commit+next_wave_count")
                 crawled += ep.n_crawl
-                store.commit({"epoch": epoch, "crawled": crawled, **mode.ckpt()})
+                meta = {"epoch": epoch, "crawled": crawled, **mode.ckpt()}
                 if self.compact_every and epoch % self.compact_every == 0:
-                    store.compact(spark, "seen", epoch)
+                    # fold the seen deltas into one, committed with the epoch
+                    store.rewrite({"seen": (0, store.read_deltas(spark, "seen", epoch))}, meta)
+                else:
+                    store.commit(meta)
                 self.stats.per_epoch.append(mode.epoch_stats(ep))
                 fetched.unpersist()
                 links.unpersist()

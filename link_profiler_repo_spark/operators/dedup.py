@@ -197,7 +197,6 @@ def minhash_pairs_from_sigs(
     threshold: float = 0.7,
     exact_buckets: bool = False,
     agree_kernel: str = "catalyst",
-    candidates: str = "join",
 ) -> DataFrame:
     """Relational tail of MinHash+LSH over a signature table: band the
     signature, self-join on (band, bucket), confirm candidates by signature
@@ -210,17 +209,13 @@ def minhash_pairs_from_sigs(
     identical pairs modulo 32-bit hash collisions among same-band buckets
     (tested equal on the gate corpus).
 
-    candidates: 'join' (default) generates candidate pairs with a bucket
-    self-join; 'groupby' is the classic one-shuffle LSH shape (groupBy
-    (band, bucket) -> sorted member list -> a<b pairs expanded in-task).
-    Both produce identical pair sets (tested). The groupby shape was
-    MEASURED against the join on the 80k-doc bench signature table
-    (3 alternating reps, local[8]): warm walls join 4.6-4.9s vs groupby
-    4.9-5.4s — the second shuffle the join pays is cheaper than the
-    ObjectHashAggregate collect_list pass, and at cluster scale the join
-    is also the safer skew shape (AQE splits a skewed join partition;
-    a hot collect_list bucket key cannot be split). Kept parameterized so
-    the trade-off stays re-measurable.
+    Candidate pairs come from a bucket self-join. The classic one-shuffle
+    LSH shape (groupBy (band, bucket) -> sorted member list -> a<b pairs
+    expanded in-task) measured slower on the 80k-doc bench signature table
+    (warm walls join 4.6-4.9s vs groupby 4.9-5.4s, local[8]): the second
+    shuffle the join pays is cheaper than the collect_list pass, and at
+    cluster scale AQE can split a skewed join partition but not a hot
+    collect_list bucket.
 
     agree_kernel: 'catalyst' (default — the cross-engine-oracleable
     sequential fold) or 'numpy' (one vectorized (pairs, 128) integer
@@ -240,43 +235,18 @@ def minhash_pairs_from_sigs(
             F.array(*[band_key(i) for i in range(bands)])
         ).alias("band", "bucket"),
     )
-    if candidates == "join":
-        left = bands_df.alias("l")
-        right = bands_df.alias("r")
-        cand = (
-            left.join(
-                right,
-                (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.bucket") == F.col("r.bucket"))
-                & (F.col("l._id") < F.col("r._id")),
-            )
-            .select(F.col("l._id").alias("a"), F.col("r._id").alias("b"))
-            .distinct()
+    left = bands_df.alias("l")
+    right = bands_df.alias("r")
+    cand = (
+        left.join(
+            right,
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.bucket") == F.col("r.bucket"))
+            & (F.col("l._id") < F.col("r._id")),
         )
-    else:
-        # sorted member list per bucket -> a<b pairs expanded in-task
-        # (slice start is 1-based: element i pairs with everything after it)
-        members = F.array_sort(F.collect_list("_id"))
-        cand = (
-            bands_df.groupBy("band", "bucket")
-            .agg(members.alias("ms"))
-            .filter(F.size("ms") >= 2)
-            .select(
-                F.explode(
-                    F.flatten(
-                        F.transform(
-                            "ms",
-                            lambda x, i: F.transform(
-                                F.slice("ms", i + F.lit(2), F.size("ms")),
-                                lambda y: F.struct(x.alias("a"), y.alias("b")),
-                            ),
-                        )
-                    )
-                ).alias("p")
-            )
-            .select("p.a", "p.b")
-            .distinct()
-        )
+        .select(F.col("l._id").alias("a"), F.col("r._id").alias("b"))
+        .distinct()
+    )
     sa = sig.select(F.col("_id").alias("a"), F.col("sig").alias("sig_a"))
     sb = sig.select(F.col("_id").alias("b"), F.col("sig").alias("sig_b"))
     # n_agree = # of equal positions (exact integer — the cross-engine-stable

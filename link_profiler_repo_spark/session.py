@@ -60,6 +60,15 @@ _BASE_CONF = {
 }
 
 
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """The default driver heap: half of physical memory in whole GiB, capped
+    at 24g. A heap the host cannot back never feels GC pressure before the
+    kernel's OOM killer ends the JVM."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(24, phys_bytes // 2 // 2**30))}g"
+
+
 def get_spark(
     app: str = "spark-frontier",
     cores: int | None = None,
@@ -76,7 +85,7 @@ def get_spark(
     # heap then GC-thrashes at high parallelism — observed 32 cores SLOWER
     # than 8). Must go through PYSPARK_SUBMIT_ARGS before the first gateway.
     if "PYSPARK_SUBMIT_ARGS" not in os.environ:
-        mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+        mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
         os.environ["PYSPARK_SUBMIT_ARGS"] = f"--driver-memory {mem} pyspark-shell"
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))

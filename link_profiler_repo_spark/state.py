@@ -1,4 +1,4 @@
-"""Epoch-versioned state tables with atomic checkpoints.
+"""Epoch-versioned state tables with one atomic checkpoint.
 
 Replaces the reference's Redis frontier persistence
 (queue_system/smart_crawler_queue.py:213-254, at-least-once) with
@@ -11,46 +11,53 @@ an Iceberg table with `epoch` as a partition/snapshot dimension):
 
   {root}/{job_id}/
     frontier/epoch=N/   full snapshot of the live frontier at epoch N
+                        (frontier_sched/ in scheduler mode)
     seen/epoch=N/       APPEND delta of URLs first crawled in epoch N
     edges/epoch=N/      append delta of link-graph edges
     metrics/epoch=N/    per-partition stage counters (lineage, north_rule)
-    dead_letter/epoch=N/
+    dead_letter/epoch=N/, enqueued/epoch=N/ (scheduler mode)
+    {table}__gen{g}/    the same table after g rewrites (generation 0 has
+                        no suffix)
     bloom_epoch{N}.npy  single-bitmap Bloom prefilter for the seen anti-join
                         (prefilter='single'; the bucketed 'sidecar' and
                         'cuckoo' layouts live in prefilter/, functions/sidecar.py)
-    _checkpoint.json    {"epoch": N, "crawled": c, ...} — written tmp+rename
+    _checkpoint.json    {"epoch": N, "crawled": c, <mode keys>,
+                         "gens": {table: g}} — written tmp+rename
 
-Reading `seen` uses directory-partition discovery so the epoch filter is
-partition-pruned (only deltas <= checkpoint epoch are scanned); periodic
-compaction folds deltas into one (mirrors Iceberg snapshot compaction).
+`_checkpoint.json` is the ONE commit point of all tables: a table's live
+generation is the one its `gens` names (0 if absent), so any state change —
+an epoch, a compaction, a recrawl readmission — becomes visible iff the
+rename that installs its manifest completed. After the rename a commit
+reclaims everything the new manifest cannot reach:
+
+  - generation directories it does not name,
+  - frontier / frontier_sched epoch snapshots below its epoch,
+  - bloom_epoch{N}.npy bitmaps below its epoch.
+
+All older ones go, not only the previous, so garbage a crash leaves between
+a rename and its reclaim goes at the next commit. Delta tables (seen, edges,
+metrics, dead_letter, enqueued) are never reclaimed: reads of `seen` are
+partition-pruned to the deltas <= the checkpoint epoch, and periodic
+compaction (rewrite) folds them into one (Iceberg snapshot compaction).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 import tempfile
 
 import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-
-def read_pointer(path: str) -> int | None:
-    """The generation a pointer file names; None if it was never written."""
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return int(f.read().strip() or 0)
-
-
-def write_pointer(path: str, g: int) -> None:
-    """Atomically point `path` at generation g (tmp file + rename): the
-    single commit point of a generation swap."""
-    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".gen.tmp")
-    with os.fdopen(fd, "w") as f:
-        f.write(str(g))
-    os.replace(tmp, path)
+# tables whose epoch=N directory is a full snapshot: resume reads only the
+# committed epoch's
+_SNAPSHOT_TABLES = ("frontier", "frontier_sched")
+_GEN_DIR = re.compile(r"(.+)__gen(\d+)")
+_BLOOM_FILE = re.compile(r"bloom_epoch(\d+)\.npy")
 
 
 class StateStore:
@@ -69,14 +76,38 @@ class StateStore:
         with open(self._ckpt_path) as f:
             return json.load(f)
 
+    def _gens(self) -> dict:
+        """The committed generation of every rewritten table."""
+        return (self.read_checkpoint() or {}).get("gens", {})
+
     def commit(self, meta: dict) -> None:
         """Atomic: the epoch is committed iff the rename completed. A crash
         mid-epoch leaves the previous manifest intact (resume re-runs the
-        epoch; all writes are per-epoch directories, so re-runs overwrite)."""
+        epoch; all writes are per-epoch directories, so re-runs overwrite).
+        The manifest carries meta's `gens` if it has one (rewrite), else the
+        committed ones; then everything it cannot reach is deleted."""
+        manifest = {"gens": self._gens(), **meta}
         fd, tmp = tempfile.mkstemp(dir=self.dir, suffix=".ckpt.tmp")
         with os.fdopen(fd, "w") as f:
-            json.dump(meta, f)
+            json.dump(manifest, f)
         os.replace(tmp, self._ckpt_path)
+        self._reclaim(manifest["gens"], int(manifest["epoch"]))
+
+    def _reclaim(self, gens: dict, epoch: int) -> None:
+        """Delete what a manifest naming `gens` at `epoch` cannot reach."""
+        for name in os.listdir(self.dir):
+            path = os.path.join(self.dir, name)
+            gen, bloom = _GEN_DIR.fullmatch(name), _BLOOM_FILE.fullmatch(name)
+            table, g = (gen[1], int(gen[2])) if gen else (name, 0)
+            if gens.get(table, 0) != g:  # a generation the manifest does not name
+                shutil.rmtree(path, ignore_errors=True)
+            elif bloom and int(bloom[1]) < epoch:
+                os.remove(path)
+        for table in _SNAPSHOT_TABLES:
+            base = self._table_dir(table, gens.get(table, 0))
+            for name in os.listdir(base) if os.path.isdir(base) else ():
+                if name.startswith("epoch=") and int(name[6:]) < epoch:
+                    shutil.rmtree(os.path.join(base, name), ignore_errors=True)
 
     # -- job control (pause/resume/cancel) -------------------------------------
     # The reference drives these over Redis pub/sub (job_coordinator.py:
@@ -108,11 +139,8 @@ class StateStore:
         file (_control.json is the operator's command channel: a pre-staged
         pause/cancel applies to the next run). A FRESH (resume=False) run
         calls this first; otherwise a previous run's compacted seen
-        generation (resolved through the persisted generation pointer, never
-        overwritten by the new run's epoch writes) leaks ghost rows into
-        `_not_seen` and silently truncates the crawl."""
-        import shutil
-
+        generation (never overwritten by the new run's epoch writes) leaks
+        ghost rows into `_not_seen` and silently truncates the crawl."""
         keep = os.path.basename(self._control_path)
         for name in os.listdir(self.dir):
             if name == keep:
@@ -128,24 +156,11 @@ class StateStore:
 
     # -- tables ---------------------------------------------------------------
     # Each logical table lives under a GENERATION directory ({table} for gen 0,
-    # {table}__gen{g} after g compactions) resolved through a tiny pointer file
-    # written tmp+rename. Compaction writes the next generation COMPLETELY,
-    # atomically bumps the pointer, and only then deletes the old generation —
-    # a crash at any point leaves exactly one complete generation readable
-    # (ADVICE r01: the old in-place compact lost the table if it died between
-    # delete and install).
-
-    def _gen_path(self, table: str) -> str:
-        return os.path.join(self.dir, f"_{table}.gen")
-
-    def _gen(self, table: str) -> int:
-        return read_pointer(self._gen_path(table)) or 0
-
-    def _set_gen(self, table: str, g: int) -> None:
-        write_pointer(self._gen_path(table), g)
+    # {table}__gen{g} after g rewrites); the checkpoint manifest names the
+    # live one, so a generation swap commits with the epoch it belongs to.
 
     def _table_dir(self, table: str, gen: int | None = None) -> str:
-        g = self._gen(table) if gen is None else gen
+        g = self._gens().get(table, 0) if gen is None else gen
         return os.path.join(self.dir, table if g == 0 else f"{table}__gen{g}")
 
     def _epoch_dir(self, table: str, epoch: int) -> str:
@@ -174,69 +189,31 @@ class StateStore:
         df = spark.read.option("basePath", base).parquet(base)
         return df.filter(F.col("epoch") <= upto_epoch)
 
-    def compact(self, spark: SparkSession, table: str, upto_epoch: int, keep_epoch: int = 0) -> None:
-        """Fold all deltas <= upto_epoch into one delta in a NEW generation
-        directory (Iceberg snapshot-compaction equivalent), crash-safe:
+    def rewrite(self, tables: dict[str, tuple[int, DataFrame]], meta: dict) -> None:
+        """Replace whole tables and commit them with `meta` — the one
+        generation swap behind seen compaction and recrawl readmission
+        (Iceberg rewrite / DELETE equivalent). `tables` maps a table to
+        (epoch, rows); crash-safe:
 
-          1. write {table}__gen{g+1}/epoch={keep_epoch} completely
-          2. atomically bump the generation pointer (the commit point)
-          3. delete the previous generation directory
+          1. write each table's next generation completely:
+             {table}__gen{g+1}/epoch={epoch} holds all of its rows
+          2. commit once, with a manifest naming the new generations
+          3. the commit's reclaim deletes the old generations
 
-        A crash before (2) leaves the old generation live and the half-written
-        new one as garbage (overwritten by the next compact); a crash after
-        (2) leaves the new generation live and the old one as garbage."""
-        import shutil
-
-        df = self.read_deltas(spark, table, upto_epoch)
-        if df is None:
-            return
-        old_gen = self._gen(table)
-        old_dir = self._table_dir(table, old_gen)
-        new_gen = old_gen + 1
-        new_dir = self._table_dir(table, new_gen)
-        if os.path.isdir(new_dir):  # garbage from a prior crash before commit
-            shutil.rmtree(new_dir)
-        df.drop("epoch").write.parquet(os.path.join(new_dir, f"epoch={keep_epoch}"))
-        self._set_gen(table, new_gen)  # commit point
-        # Reclaim ALL generations below the pointer, not just old_gen — a crash
-        # after a previous pointer bump but before its delete orphans that
-        # generation, and the seen table is the largest state at design scale.
-        for g in range(new_gen):
-            shutil.rmtree(self._table_dir(table, g), ignore_errors=True)
-
-    def retire(
-        self,
-        spark: SparkSession,
-        table: str,
-        keys: DataFrame,
-        key_col: str = "url_hash",
-        broadcast_keys: bool = True,
-    ) -> None:
-        """Iceberg DELETE equivalent: fold all of `table`'s deltas into a new
-        generation MINUS the given keys (anti-join on key_col), with the same
-        crash-safe generation-pointer commit as compact(). Used by recrawl
-        readmission (CrawlEngine.readmit) to retire due URLs from the exact
-        seen set. A recrawl due-set is normally tiny next to the seen table,
-        so the anti-join broadcasts the keys by default; pass
-        broadcast_keys=False for a bulk retirement wave to let AQE pick."""
-        import shutil
-
-        df = self.read_deltas(spark, table, upto_epoch=1 << 62)
-        if df is None:
-            return
-        k = keys.select(key_col).distinct()
-        if broadcast_keys:
-            k = F.broadcast(k)
-        pruned = df.join(k, key_col, "left_anti")
-        old_gen = self._gen(table)
-        new_gen = old_gen + 1
-        new_dir = self._table_dir(table, new_gen)
-        if os.path.isdir(new_dir):  # garbage from a prior crash before commit
-            shutil.rmtree(new_dir)
-        pruned.drop("epoch").write.parquet(os.path.join(new_dir, "epoch=0"))
-        self._set_gen(table, new_gen)  # commit point
-        for g in range(new_gen):
-            shutil.rmtree(self._table_dir(table, g), ignore_errors=True)
+        A crash before (2) leaves every old generation live and the
+        half-written new ones as garbage (cleared by a retry, deleted by the
+        next commit); a crash after (2) leaves the new generations live and
+        the old ones as garbage the next commit deletes. The new generation
+        is never a directory the rows' plans read, so no write empties its
+        own input (ADVICE r01: the old in-place compact lost the table if it
+        died between delete and install)."""
+        gens = self._gens()
+        new = {t: gens.get(t, 0) + 1 for t in tables}
+        for t, (epoch, df) in tables.items():
+            d = self._table_dir(t, new[t])
+            shutil.rmtree(d, ignore_errors=True)
+            df.drop("epoch").write.parquet(os.path.join(d, f"epoch={epoch}"))
+        self.commit({**meta, "gens": {**gens, **new}})
 
     # -- single-bitmap Bloom prefilter -------------------------------------------
     def write_bloom(self, epoch: int, bitmap: np.ndarray) -> str:

@@ -218,15 +218,6 @@ def test_minhash_bucket_modes_agree(spark):
     }
     hashed, exact = get(False), get(True)
     assert hashed == exact and len(exact) > 0
-    # and the kept-for-remeasure groupBy+in-task-expansion candidate shape
-    # equals the default bucket self-join shape
-    grouped = {
-        (r["a"], r["b"]): r["n_agree"]
-        for r in minhash_pairs_from_sigs(
-            sigs, threshold=0.5, exact_buckets=False, candidates="groupby"
-        ).collect()
-    }
-    assert grouped == hashed
     sigs.unpersist()
 
 

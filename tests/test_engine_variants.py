@@ -56,16 +56,19 @@ def test_bucketed_docs_layout_matches_oracle(spark):
         docs_df.unpersist()
 
 
-def test_broadcast_fetch_join_matches_oracle(spark):
-    """corpus_broadcast_ratio=0 forces the broadcast-wave fetch path (inner
+def test_broadcast_fetch_join_matches_oracle(spark, monkeypatch):
+    """CORPUS_BROADCAST_RATIO=0 forces the broadcast-wave fetch path (inner
     join + wave-side 404 recovery); must be semantically invisible."""
+    from link_profiler_repo_spark.operators import crawl
+
+    monkeypatch.setattr(crawl, "CORPUS_BROADCAST_RATIO", 0)
     cfg = CrawlConfig(job_id="bcastfetch", max_depth=3, max_pages=300)
     docs, seeds = build_fixture(P, n_seeds=2)
     expected = simulate_bfs(docs, seeds, cfg, P)
     docs_df = synth_docs_spark(spark, P).persist()
     eng = CrawlEngine(
         spark, cfg, docs_df, tempfile.mkdtemp(), synth_params=P,
-        prefilter=None, corpus_broadcast_ratio=0, metrics_enabled=False,
+        prefilter=None, metrics_enabled=False,
     )
     out = eng.run_bfs(seeds)
     assert _order(out) == expected.order

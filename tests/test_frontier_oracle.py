@@ -8,6 +8,8 @@ logical politeness epochs. Engine runs are module-scoped and shared across
 assertions (they are the expensive part).
 """
 
+import json
+import os
 import tempfile
 
 import pytest
@@ -139,11 +141,11 @@ def sched_run(spark, docs_df):
     # collect_waves is an oracle-test-only opt-in: the scheduler hot loop
     # itself never collects (VERDICT r01 #3)
     out = eng.run_scheduler(seeds, collect_waves=True)
-    return expected, out
+    return expected, out, eng.store.dir
 
 
 def test_scheduler_waves_match_oracle(sched_run):
-    expected, out = sched_run
+    expected, out, _ = sched_run
     assert out["waves"] == expected.waves, (
         f"wave mismatch: engine {len(out['waves'])} epochs vs oracle {len(expected.waves)}; "
         f"first diff epoch: "
@@ -152,17 +154,32 @@ def test_scheduler_waves_match_oracle(sched_run):
 
 
 def test_scheduler_seen_matches_oracle(sched_run):
-    expected, out = sched_run
+    expected, out, _ = sched_run
     got_seen = {r["url"] for r in out["seen"].select("url").collect()}
     assert got_seen == expected.seen
 
 
 def test_scheduler_dead_letter_matches_oracle(sched_run):
     # flaky hosts (503) exhaust retries -> dead_letter (smart_crawler_queue.py:190-192)
-    expected, out = sched_run
+    expected, out, _ = sched_run
     assert expected.dead_letter, "fixture should produce dead-letter entries"
     got_dead = {(r["url"], int(r["retries"])) for r in out["dead_letter"].collect()}
     assert got_dead == set(expected.dead_letter)
+
+
+def test_scheduler_state_keeps_only_what_resume_reads(sched_run):
+    """Every commit reclaims what its checkpoint cannot reach: after a
+    many-epoch crawl only the committed epoch's frontier snapshot and Bloom
+    bitmap remain, and no per-table generation pointer file exists (the
+    checkpoint names each table's generation)."""
+    _, _, state_dir = sched_run
+    with open(os.path.join(state_dir, "_checkpoint.json")) as f:
+        epochs = json.load(f)["epoch"]
+    assert epochs > 2
+    names = os.listdir(state_dir)
+    assert os.listdir(os.path.join(state_dir, "frontier_sched")) == [f"epoch={epochs}"]
+    assert [n for n in names if n.startswith("bloom_epoch")] == [f"bloom_epoch{epochs}.npy"]
+    assert not [n for n in names if n.startswith("_") and n.endswith(".gen")]
 
 
 def test_scheduler_sitemap_seeding_matches_oracle(spark, docs_df):

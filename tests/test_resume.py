@@ -5,6 +5,8 @@ reference's at-least-once Redis persistence, smart_crawler_queue.py:229-254)."""
 
 import tempfile
 
+import pytest
+
 from link_profiler_repo_spark.config import CrawlConfig
 from link_profiler_repo_spark.operators.crawl import CrawlEngine
 from link_profiler_repo_spark.oracle_sim import build_fixture, simulate_bfs
@@ -146,10 +148,14 @@ def _rows(df):
     return sorted((r["url_hash"], int(r["epoch"])) for r in df.collect())
 
 
-def test_compaction_crash_safe(spark):
-    """A crash at ANY point during compaction must leave exactly one complete
-    generation readable (ADVICE r01: the old in-place compact deleted the
-    deltas before installing the replacement)."""
+def test_compaction_crash_safe(spark, monkeypatch):
+    """A crash at ANY point of a compaction (StateStore.rewrite) must leave
+    exactly one complete generation readable: the checkpoint rename is the
+    commit point (ADVICE r01: the old in-place compact deleted the deltas
+    before installing the replacement)."""
+    import os
+    import shutil
+
     import pyspark.sql.functions as F
 
     from link_profiler_repo_spark.state import StateStore
@@ -161,48 +167,47 @@ def test_compaction_crash_safe(spark):
             F.concat(F.lit(f"h{e}-"), F.col("id").cast("string")).alias("url_hash")
         )
         store.write_epoch("seen", e, df)
+    store.commit({"epoch": 3})
     before = _rows(store.read_deltas(spark, "seen", 3))
     assert len(before) == 9
 
-    # crash AFTER the new generation is written but BEFORE the pointer bump:
-    # the old generation must still be fully readable
-    real_set_gen = store._set_gen
-    store._set_gen = lambda t, g: (_ for _ in ()).throw(RuntimeError("crash"))
-    try:
-        store.compact(spark, "seen", 3)
-        raise AssertionError("expected simulated crash")
-    except RuntimeError:
-        pass
-    store._set_gen = real_set_gen
+    def compact():
+        store.rewrite({"seen": (0, store.read_deltas(spark, "seen", 3))}, {"epoch": 3})
+
+    def crash_on(fn, target):  # fn(..., target) raises instead of running
+        def f(*args, **kwargs):
+            if str(args[-1]) == target:
+                raise RuntimeError("crash")
+            return fn(*args, **kwargs)
+        return f
+
+    # crash AFTER the new generation is written but BEFORE the manifest
+    # rename: the old generation must still be fully readable
+    old_dir = store._table_dir("seen")
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash_on(os.replace, store._ckpt_path))
+        with pytest.raises(RuntimeError):
+            compact()
+    assert store._table_dir("seen") == old_dir
     assert _rows(store.read_deltas(spark, "seen", 3)) == before
 
-    # crash AFTER the pointer bump but BEFORE old-gen deletion: the NEW
+    # crash AFTER the rename, in the reclaim of the old generation: the NEW
     # generation must be live (rows identical modulo the folded epoch column)
-    import shutil as _shutil
-
-    old_dir = store._table_dir("seen")  # the generation about to be replaced
-    real_rmtree = _shutil.rmtree
-
-    def crash_on_old(path, *a, **k):
-        if str(path) == old_dir:
-            raise RuntimeError("crash")
-        return real_rmtree(path, *a, **k)
-
-    try:
-        _shutil.rmtree = crash_on_old
-        try:
-            store.compact(spark, "seen", 3)
-        except RuntimeError:
-            pass
-    finally:
-        _shutil.rmtree = real_rmtree
+    with monkeypatch.context() as m:
+        m.setattr(shutil, "rmtree", crash_on(shutil.rmtree, old_dir))
+        with pytest.raises(RuntimeError):
+            compact()
+    hashes = sorted(h for h, _ in before)
+    assert store._table_dir("seen") != old_dir
     after = store.read_deltas(spark, "seen", 3)
-    assert sorted(r["url_hash"] for r in after.collect()) == sorted(h for h, _ in before)
-    # and a fresh store over the same dir resolves the same generation
+    assert sorted(r["url_hash"] for r in after.collect()) == hashes
+    # a fresh store over the same dir resolves the same generation
     store2 = StateStore(wd, "compact-crash")
-    assert sorted(r["url_hash"] for r in store2.read_deltas(spark, "seen", 3).collect()) == sorted(
-        h for h, _ in before
-    )
+    assert sorted(r["url_hash"] for r in store2.read_deltas(spark, "seen", 3).collect()) == hashes
+    # and the next commit deletes the garbage the crash left
+    assert os.path.isdir(old_dir)
+    store2.commit({"epoch": 4})
+    assert not os.path.exists(old_dir)
 
 
 def test_fresh_run_ignores_prior_state(spark, tmp_path):
