@@ -969,7 +969,7 @@ def _crawl_throughput_evlogged(
         docs.count()
         eng = CrawlEngine(
             spark, cfg, docs, tempfile.mkdtemp(prefix="crawlbench_"),
-            synth_params=p, prefilter="single", bloom_bits=1 << 21,
+            synth_params=p, prefilter="bloom", bloom_bits=1 << 21,
             # engine defaults: adaptive wave path (tiny waves take the
             # single-partition shortcut, real waves the distributed one —
             # both oracle-verified; the bench measures the production config)

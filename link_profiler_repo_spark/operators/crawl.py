@@ -31,10 +31,10 @@ Admission: inbound-link count, robots disallow + domain filters
 (robots_parser.py semantics), anti-join vs the `enqueued` set, W4 priority,
 retry demotion + dead-letter (:182-192), unioned with the leftover frontier.
 
-The seen anti-join is hash-partitioned with a Bloom/cuckoo prefilter (one
-broadcast bitmap, or a bucketed table from functions/sidecar.py), the
-dense ordering index uses range-partition + per-partition offsets (no global
-window), and skew from hot hosts rides on AQE skew-join handling.
+The seen anti-join is hash-partitioned with a Bloom/cuckoo prefilter table
+(functions/sidecar.py), the dense ordering index uses range-partition +
+per-partition offsets (no global window), and skew from hot hosts rides on
+AQE skew-join handling.
 """
 
 from __future__ import annotations
@@ -51,7 +51,6 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..config import CrawlConfig
-from ..functions.bloom import add_to_bloom, might_contain_udf
 from ..functions.extract import with_links
 from ..functions.localdf import local_df
 from ..functions.sidecar import Sidecar
@@ -75,6 +74,14 @@ SMALL_WAVE_ROWS = 2_000
 # wave the corpus must outnumber for the broadcast to win (see _fetch_join).
 BROADCAST_WAVE_MAX = 2_000_000
 CORPUS_BROADCAST_RATIO = 50
+# Prefilter bits per bucket: the bucket count is ceil(bloom_bits / this), so
+# a probe task loads at most 4 MiB of Bloom state. Crawls up to 2^25 bits
+# (~3M URLs at 1% fpp) get one bucket; 10^10 URLs get thousands.
+PREFILTER_BUCKET_BITS = 1 << 25
+
+# Every prefilter fold goes through this module-level name: a traced
+# benchmark run wraps it by name to time the fold.
+add_to_bloom = Sidecar.update
 
 
 def _first_occurrence(df: DataFrame, key: str, order: F.Column) -> DataFrame:
@@ -119,7 +126,6 @@ class _Epoch:
     n_front: int  # rows of the frontier it starts from
     small: bool  # n_front < SMALL_WAVE_ROWS
     seen: DataFrame | None  # pages crawled through the previous epoch
-    bloom: np.ndarray | None  # single-bitmap prefilter, if that layout is on
     n_crawl: int = 0  # pages this epoch crawls (set after wave selection)
 
 
@@ -132,41 +138,35 @@ class CrawlEngine:
         workdir: str,
         synth_params: SynthParams | None = None,
         robots_df: DataFrame | None = None,
-        prefilter: str | None = "single",
+        prefilter: str | None = "bloom",
         bloom_bits: int = 1 << 23,
-        bloom_buckets: int = 64,
-        canonical_mode: str = "identity",
         compact_every: int = 0,
         seen_layout: str = "delta",
         metrics_enabled: bool = True,
         docs_layout: str = "inmem",
         docs_buckets: int = 32,
     ):
-        if prefilter not in (None, "single", "sidecar", "cuckoo"):
-            raise ValueError(
-                f"prefilter={prefilter!r}: expected None, 'single', 'sidecar' or 'cuckoo'"
-            )
+        if prefilter not in (None, "bloom", "cuckoo"):
+            raise ValueError(f"prefilter={prefilter!r}: expected None, 'bloom' or 'cuckoo'")
         self.spark = spark
         self.cfg = cfg
         self.p = synth_params or SynthParams()
         self.docs = docs_df
         self.robots = robots_df
         self.store = StateStore(workdir, cfg.job_id)
-        # None: exact anti-join only. 'single': one broadcast bitmap of
-        # bloom_bits (fine to ~10^8 seen). 'sidecar' / 'cuckoo': a table of
-        # bloom_buckets Bloom / cuckoo filters sharing bloom_bits, whose probe
-        # tasks load only their buckets — the layout that survives 10^10;
-        # cuckoo can also DELETE (recrawl eviction).
+        # None: exact anti-join only. 'bloom' / 'cuckoo': a table of Bloom /
+        # cuckoo filters sharing bloom_bits over ceil(bloom_bits /
+        # PREFILTER_BUCKET_BITS) buckets, whose probe tasks load only their
+        # buckets; cuckoo can also DELETE (recrawl eviction).
         self.prefilter = prefilter
-        self.bloom_bits = bloom_bits
         self._sidecar = None
-        if prefilter in ("sidecar", "cuckoo"):
+        self._layout = "none"  # recorded in every checkpoint
+        if prefilter is not None:
+            n_buckets = -(-bloom_bits // PREFILTER_BUCKET_BITS)
             self._sidecar = Sidecar(
-                os.path.join(self.store.dir, "prefilter"),
-                "bloom" if prefilter == "sidecar" else "cuckoo",
-                bloom_buckets, bloom_bits,
+                os.path.join(self.store.dir, "prefilter"), prefilter, n_buckets, bloom_bits
             )
-        self.canonical_mode = canonical_mode
+            self._layout = f"{prefilter}, {bloom_bits} bits, n_buckets={n_buckets}"
         # fold seen/edges deltas every k epochs (0 = off); Iceberg snapshot
         # compaction equivalent — keeps the per-wave delta-union scan bounded
         self.compact_every = compact_every
@@ -217,7 +217,7 @@ class CrawlEngine:
         # else a raw-spelling variant absent from the bloom would take the
         # sure_new fast path around the exact join (ADVICE r01)
         c = F.col(url_col)
-        canon = canonicalize(c, self.canonical_mode)
+        canon = canonicalize(c)
         return (
             df.withColumn("url_hash", url_sha256(canon))
             .withColumn("xx64", F.xxhash64(canon))
@@ -339,7 +339,7 @@ class CrawlEngine:
             .otherwise(F.lit(200))
         )
 
-    def _not_seen(self, df: DataFrame, seen: DataFrame | None, bloom: np.ndarray | None) -> DataFrame:
+    def _not_seen(self, df: DataFrame, seen: DataFrame | None) -> DataFrame:
         """Exact anti-join vs seen, Bloom-prefiltered: definite-new rows skip
         the shuffle; possible-positives fall through to the exact join.
         False positives only cost join work; false negatives are impossible,
@@ -347,13 +347,8 @@ class CrawlEngine:
         if seen is None:
             return df
         seen_keys = seen.select("url_hash")
-        flagged = None
         if self._sidecar is not None and self._sidecar.live():
             flagged = self._sidecar.probe(df)
-        elif bloom is not None:
-            probe = might_contain_udf(bloom, self.bloom_bits, spark=self.spark)
-            flagged = df.withColumn("_maybe", probe(F.col("xx64")))
-        if flagged is not None:
             sure_new = flagged.filter(~F.col("_maybe")).drop("_maybe")
             maybe = (
                 flagged.filter(F.col("_maybe"))
@@ -363,14 +358,10 @@ class CrawlEngine:
             return sure_new.unionByName(maybe)
         return df.join(seen_keys, "url_hash", "left_anti")
 
-    def _bloom_insert(self, bloom: np.ndarray | None, df: DataFrame) -> np.ndarray | None:
-        """Insert df's xx64 keys into the active prefilter; returns the
-        updated single bitmap (a bucketed table lives on disk)."""
+    def _bloom_insert(self, df: DataFrame) -> None:
+        """Fold df's xx64 keys into the prefilter table, if one is on."""
         if self._sidecar is not None:
-            self._sidecar.update(df.select("xx64"))
-        elif self.prefilter == "single":
-            bloom = add_to_bloom(bloom, df, "xx64", self.bloom_bits)
-        return bloom
+            add_to_bloom(self._sidecar, df.select("xx64"))
 
     def evict_seen_prefilter(self, df: DataFrame) -> None:
         """Recrawl eviction (operators/recrawl.py composition): remove url
@@ -395,7 +386,7 @@ class CrawlEngine:
         continuing the global counter. After the commit they are evicted
         from the cuckoo prefilter to ride the sure-new fast path again; a
         crash before that only costs them the exact anti-join, as on the
-        Bloom layouts, which cannot forget.
+        Bloom kernel, which cannot forget.
 
         By default each URL re-enters at its ORIGINAL depth (carried from the
         seen state), so the resumed expansion exactly mirrors the first crawl
@@ -520,6 +511,15 @@ class CrawlEngine:
 
         ckpt = store.read_checkpoint() if resume else None
         if ckpt is not None:
+            # the prefilter holds the keys of every page crawled before the
+            # checkpoint; another layout would let those pages skip the exact
+            # anti-join and be crawled again
+            saved = ckpt.get("prefilter", "unrecorded")
+            if saved != self._layout:
+                raise ValueError(
+                    f"checkpoint prefilter layout {saved!r} differs from this "
+                    f"engine's {self._layout!r}: resume with the layout it was crawled with"
+                )
             epoch = int(ckpt["epoch"])
             crawled = int(ckpt["crawled"])
             self.stats.resumed_from = epoch
@@ -527,7 +527,6 @@ class CrawlEngine:
             self._step(epoch, "resume")
             mode.resume(ckpt)
             frontier = store.read_epoch(spark, mode.table, epoch)
-            bloom = store.read_bloom(epoch) if self.prefilter == "single" else None
         else:
             store.reset()  # a fresh run must not inherit prior generations
             epoch = 0
@@ -535,15 +534,8 @@ class CrawlEngine:
             self._step(epoch, "seed")
             store.write_epoch(mode.table, 0, mode.seed_frontier(seeds))
             frontier = store.read_epoch(spark, mode.table, 0)
-            bloom = mode.seed_prefilter(
-                frontier,
-                np.zeros(self.bloom_bits // 8, dtype=np.uint8)
-                if self.prefilter == "single"
-                else None,
-            )
-            if bloom is not None:
-                store.write_bloom(0, bloom)
-            store.commit({"epoch": 0, "crawled": 0, **mode.ckpt()})
+            mode.seed_prefilter(frontier)
+            store.commit({"epoch": 0, "crawled": 0, "prefilter": self._layout, **mode.ckpt()})
 
         bucketed = self._bucketed if mode.probes_seen else None
         if bucketed is not None:
@@ -569,7 +561,7 @@ class CrawlEngine:
                     seen = bucketed.df()
                 else:
                     seen = store.read_deltas(spark, "seen", epoch - 1)
-                ep = _Epoch(epoch, crawled, n_front, n_front < SMALL_WAVE_ROWS, seen, bloom)
+                ep = _Epoch(epoch, crawled, n_front, n_front < SMALL_WAVE_ROWS, seen)
                 coalesce = 1 if ep.small else None
                 wave = mode.select_wave(ep, frontier)
                 if wave is None:
@@ -646,9 +638,7 @@ class CrawlEngine:
                     self._log_metrics, epoch, [("crawled", fetched), ("scheduled", stored)]
                 )
                 self._step(epoch, "bloom_insert")
-                bloom = self._bloom_insert(bloom, prefilter_keys)
-                if bloom is not None:
-                    store.write_bloom(epoch, bloom)
+                self._bloom_insert(prefilter_keys)
                 fut_metrics.result()
                 if bucketed is not None:
                     # append AFTER all of this wave's anti-join consumers ran —
@@ -663,7 +653,9 @@ class CrawlEngine:
 
                 self._step(epoch, "commit+next_wave_count")
                 crawled += ep.n_crawl
-                meta = {"epoch": epoch, "crawled": crawled, **mode.ckpt()}
+                meta = {
+                    "epoch": epoch, "crawled": crawled, "prefilter": self._layout, **mode.ckpt(),
+                }
                 if self.compact_every and epoch % self.compact_every == 0:
                     # fold the seen deltas into one, committed with the epoch
                     store.rewrite({"seen": (0, store.read_deltas(spark, "seen", epoch))}, meta)
@@ -878,20 +870,19 @@ class _Bfs:
         df = local_df(self.eng.spark, rows, "url string, wave_seq long")
         return self.eng._with_keys(df).withColumn("depth", F.lit(0)).select(*_FRONTIER_COLS)
 
-    def seed_prefilter(self, frontier: DataFrame, bloom):
-        return bloom  # the prefilter holds crawled pages; none yet
+    def seed_prefilter(self, frontier: DataFrame) -> None:
+        pass  # the prefilter holds crawled pages; none yet
 
     def select_wave(self, ep: _Epoch, frontier: DataFrame):
         cfg = self.eng.cfg
         # dequeue-time skips: depth >= max_depth (crawl_service.py:499-501),
         # seen (:497-498), first-occurrence within the wave (dup enqueues).
-        # Dedup on url_hash, not raw url: they are the same identity under
-        # canonical_mode='identity' (sha256 of the raw string), but under
-        # 'full' two raw spellings of one canonical URL must collapse here.
-        # wave_seq is dense-unique, so the first occurrence is well defined.
+        # Dedup on url_hash, the canonical identity every seen check keys on
+        # (sha256 of canonicalize(url)). wave_seq is dense-unique, so the
+        # first occurrence is well defined.
         elig = frontier.filter(F.col("depth") < F.lit(cfg.max_depth))
         elig = _first_occurrence(elig, "url_hash", F.col("wave_seq"))
-        elig = self.eng._not_seen(elig, ep.seen, ep.bloom)
+        elig = self.eng._not_seen(elig, ep.seen)
         # bucket_by: wave_seq is dense in [0, n_front) by construction
         # (seed/admission/indexing all emit dense indexes), so the global
         # index needs no range-sampling pass over the filter lineage
@@ -910,7 +901,7 @@ class _Bfs:
         cand = eng._with_keys(cand)
         if cfg.allowed_domains:
             cand = cand.filter(F.col("host").isin(*sorted(cfg.allowed_domains)))
-        cand = eng._not_seen(cand, ep.seen, ep.bloom)
+        cand = eng._not_seen(cand, ep.seen)
         # not crawled earlier in THIS wave (seen set grows during the wave);
         # keyed on url_hash for the same canonical-identity reason as above
         cw = fetched.select(F.col("url_hash").alias("_cu"), F.col("crawl_idx").alias("_ck"))
@@ -1009,12 +1000,12 @@ class _Scheduler:
         df = df.drop("arrival_seq").withColumnRenamed("_seq_dense", "arrival_seq")
         return df.select(*_SCHED_COLS)
 
-    def seed_prefilter(self, frontier: DataFrame, bloom):
+    def seed_prefilter(self, frontier: DataFrame) -> None:
         # 'enqueued' admission-dedup state (scheduler mode dedups at admission)
         self.eng.store.write_epoch(
             "enqueued", 0, frontier.select("url_hash", "xx64", F.lit(0).alias("epoch"))
         )
-        return self.eng._bloom_insert(bloom, frontier)
+        self.eng._bloom_insert(frontier)
 
     def select_wave(self, ep: _Epoch, frontier: DataFrame):
         cfg, robots = self.eng.cfg, self.eng.robots
@@ -1078,7 +1069,7 @@ class _Scheduler:
         # boost; oracle_sim counts the same pre-filter link events)
         cand = cand.withColumn("_bl", F.count("*").over(Window.partitionBy("url")))
         cand = eng._admission_filters(eng._with_keys(cand))
-        cand = eng._not_seen(cand, store.read_deltas(spark, "enqueued", ep.n - 1), ep.bloom)
+        cand = eng._not_seen(cand, store.read_deltas(spark, "enqueued", ep.n - 1))
         # first occurrence within the wave (the enqueued set updates
         # sequentially); (wave_idx, pos) is unique per link row
         cand = _first_occurrence(cand, "url_hash", F.struct("wave_idx", "pos"))

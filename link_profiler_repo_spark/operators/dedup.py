@@ -34,7 +34,8 @@ from pyspark.sql import DataFrame
 
 from .order import track_persist
 
-# deterministic 64-bit mix (same constants as functions/bloom.py)
+# deterministic 64-bit mix (splitmix64's golden-ratio increment, as in
+# functions/sidecar.py's Bloom positions)
 _MIX = np.uint64(0x9E3779B97F4A7C15)
 
 
@@ -798,33 +799,30 @@ def _cdc_chunk_hashes(
         mask = np.uint64((1 << mask_bits) - 1)
         cut_after = ends[(wh & mask) == 0] + 1  # boundary AFTER this byte
         # build the boundary list first, then hash each final span — so a
-        # sub-min_len remainder (after max_len clamping, or at end-of-doc)
-        # MERGES into the preceding chunk instead of being emitted as a tiny
-        # low-entropy chunk whose hash is ~the byte value (ADVICE r03 #4;
-        # standard CDC remainder handling — chunks may reach max_len+min_len-1)
+        # sub-min_len remainder never becomes a tiny low-entropy chunk whose
+        # hash is ~the byte value (ADVICE r03 #4): the max_len clamp stops
+        # before it would leave one, and a short end-of-doc tail rejoins the
+        # previous chunk, re-clamped with it. Every chunk spans [min_len,
+        # max_len + min_len - 1] bytes unless the whole doc is shorter.
         cuts: list[int] = []
-
-        def add_cut(c: int) -> None:
-            prev = cuts[-1] if cuts else 0
-            if c - prev < min_len and cuts:
-                cuts[-1] = c  # extend the previous chunk over the remainder
-            else:
-                cuts.append(c)
-
         start = 0
-        for c in cut_after.tolist():
-            if c - start < min_len:
-                continue
-            while c - start > max_len:  # clamp oversized chunks
-                add_cut(start + max_len)
+
+        def close(c: int) -> None:
+            nonlocal start
+            while c - start >= max_len + min_len:
                 start += max_len
-            add_cut(c)
+                cuts.append(start)
+            cuts.append(c)
             start = c
-        while n - start > max_len:
-            add_cut(start + max_len)
-            start += max_len
+
+        for c in cut_after.tolist():
+            if c - start >= min_len:
+                close(c)
         if n > start:
-            add_cut(n)
+            if n - start < min_len and cuts:
+                cuts.pop()
+                start = cuts[-1] if cuts else 0
+            close(n)
         # all span hashes in one vectorized pass (polynomial of data[s:e]
         # normalized to start at p^0) — same arithmetic as the old per-span
         # helper, without a Python call per chunk

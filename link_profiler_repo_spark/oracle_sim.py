@@ -212,7 +212,6 @@ def simulate_scheduler(
     p: SynthParams,
     robots_rows: list[dict] | None = None,
     max_epochs: int = 10_000,
-    canonical_mode: str = "identity",
 ) -> SchedResult:
     from .functions.urls import canonicalize_str
 
@@ -242,7 +241,7 @@ def simulate_scheduler(
         if cfg.respect_robots_txt and _robots_disallowed(url, robots):
             return
         if retries == 0:
-            key = canonicalize_str(url, canonical_mode)
+            key = canonicalize_str(url)
             if key in enqueued or key in seen_keys:
                 return
             enqueued.add(key)
@@ -295,7 +294,7 @@ def simulate_scheduler(
             if t.depth >= cfg.max_depth:
                 continue
             seen.add(t.url)
-            seen_keys.add(canonicalize_str(t.url, canonical_mode))
+            seen_keys.add(canonicalize_str(t.url))
             crawled += 1
             order.append((crawled - 1, t.url, t.depth))
             wave.append((t.url, t.depth))

@@ -18,9 +18,9 @@ an Iceberg table with `epoch` as a partition/snapshot dimension):
     dead_letter/epoch=N/, enqueued/epoch=N/ (scheduler mode)
     {table}__gen{g}/    the same table after g rewrites (generation 0 has
                         no suffix)
-    bloom_epoch{N}.npy  single-bitmap Bloom prefilter for the seen anti-join
-                        (prefilter='single'; the bucketed 'sidecar' and
-                        'cuckoo' layouts live in prefilter/, functions/sidecar.py)
+    prefilter/          the Bloom or cuckoo prefilter of the seen anti-join,
+                        a bucketed table with its own generation pointer
+                        (functions/sidecar.py)
     _checkpoint.json    {"epoch": N, "crawled": c, <mode keys>,
                          "gens": {table: g}} — written tmp+rename
 
@@ -31,8 +31,7 @@ rename that installs its manifest completed. After the rename a commit
 reclaims everything the new manifest cannot reach:
 
   - generation directories it does not name,
-  - frontier / frontier_sched epoch snapshots below its epoch,
-  - bloom_epoch{N}.npy bitmaps below its epoch.
+  - frontier / frontier_sched epoch snapshots below its epoch.
 
 All older ones go, not only the previous, so garbage a crash leaves between
 a rename and its reclaim goes at the next commit. Delta tables (seen, edges,
@@ -49,7 +48,6 @@ import re
 import shutil
 import tempfile
 
-import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -57,7 +55,6 @@ from pyspark.sql import DataFrame, SparkSession
 # committed epoch's
 _SNAPSHOT_TABLES = ("frontier", "frontier_sched")
 _GEN_DIR = re.compile(r"(.+)__gen(\d+)")
-_BLOOM_FILE = re.compile(r"bloom_epoch(\d+)\.npy")
 
 
 class StateStore:
@@ -96,13 +93,10 @@ class StateStore:
     def _reclaim(self, gens: dict, epoch: int) -> None:
         """Delete what a manifest naming `gens` at `epoch` cannot reach."""
         for name in os.listdir(self.dir):
-            path = os.path.join(self.dir, name)
-            gen, bloom = _GEN_DIR.fullmatch(name), _BLOOM_FILE.fullmatch(name)
+            gen = _GEN_DIR.fullmatch(name)
             table, g = (gen[1], int(gen[2])) if gen else (name, 0)
             if gens.get(table, 0) != g:  # a generation the manifest does not name
-                shutil.rmtree(path, ignore_errors=True)
-            elif bloom and int(bloom[1]) < epoch:
-                os.remove(path)
+                shutil.rmtree(os.path.join(self.dir, name), ignore_errors=True)
         for table in _SNAPSHOT_TABLES:
             base = self._table_dir(table, gens.get(table, 0))
             for name in os.listdir(base) if os.path.isdir(base) else ():
@@ -135,7 +129,7 @@ class StateStore:
 
     def reset(self) -> None:
         """Delete all persisted state for this job — every table generation,
-        the checkpoint manifest, bloom sidecars — but PRESERVE the control
+        the checkpoint manifest, the prefilter table — but PRESERVE the control
         file (_control.json is the operator's command channel: a pre-staged
         pause/cancel applies to the next run). A FRESH (resume=False) run
         calls this first; otherwise a previous run's compacted seen
@@ -214,13 +208,3 @@ class StateStore:
             shutil.rmtree(d, ignore_errors=True)
             df.drop("epoch").write.parquet(os.path.join(d, f"epoch={epoch}"))
         self.commit({**meta, "gens": {**gens, **new}})
-
-    # -- single-bitmap Bloom prefilter -------------------------------------------
-    def write_bloom(self, epoch: int, bitmap: np.ndarray) -> str:
-        path = os.path.join(self.dir, f"bloom_epoch{epoch}.npy")
-        np.save(path, bitmap)
-        return path
-
-    def read_bloom(self, epoch: int) -> np.ndarray | None:
-        path = os.path.join(self.dir, f"bloom_epoch{epoch}.npy")
-        return np.load(path) if os.path.exists(path) else None

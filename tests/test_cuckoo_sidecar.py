@@ -70,20 +70,24 @@ def test_stash_stays_empty_at_design_load(spark, tmp_path):
     assert all(got.values())
 
 
-def test_engine_eviction_roundtrip(spark, tmp_path):
+def test_engine_eviction_roundtrip(spark, tmp_path, monkeypatch):
     """evict_seen_prefilter: crawled keys vanish from the prefilter (the
     recrawl-readmission path); non-evicted keys stay."""
     from link_profiler_repo_spark.config import CrawlConfig
+    from link_profiler_repo_spark.operators import crawl
     from link_profiler_repo_spark.operators.crawl import CrawlEngine
     from link_profiler_repo_spark.synth import SynthParams, synth_docs_spark
+
+    monkeypatch.setattr(crawl, "PREFILTER_BUCKET_BITS", (1 << 16) // N_BUCKETS)
 
     p = SynthParams(n_docs=60, n_hosts=4)
     cfg = CrawlConfig(job_id="cuckoo-evict", max_depth=2, max_pages=100)
     docs_df = synth_docs_spark(spark, p)
     eng = CrawlEngine(
         spark, cfg, docs_df, str(tmp_path / "wd"), synth_params=p,
-        prefilter="cuckoo", bloom_buckets=8, bloom_bits=1 << 16, metrics_enabled=False,
+        prefilter="cuckoo", bloom_bits=1 << 16, metrics_enabled=False,
     )
+    assert eng._sidecar.n_buckets == N_BUCKETS
     keys = _keys(spark, 0, 500)
     evict = keys.filter(F.pmod(F.col("xx64"), F.lit(5)) < 2)  # ~40%, deterministic
     eng._sidecar.update(keys)

@@ -169,16 +169,19 @@ def test_scheduler_dead_letter_matches_oracle(sched_run):
 
 def test_scheduler_state_keeps_only_what_resume_reads(sched_run):
     """Every commit reclaims what its checkpoint cannot reach: after a
-    many-epoch crawl only the committed epoch's frontier snapshot and Bloom
-    bitmap remain, and no per-table generation pointer file exists (the
-    checkpoint names each table's generation)."""
+    many-epoch crawl only the committed epoch's frontier snapshot and one
+    prefilter generation remain, no Bloom bitmap file is written, and no
+    per-table generation pointer file exists (the checkpoint names each
+    table's generation)."""
     _, _, state_dir = sched_run
     with open(os.path.join(state_dir, "_checkpoint.json")) as f:
         epochs = json.load(f)["epoch"]
     assert epochs > 2
     names = os.listdir(state_dir)
     assert os.listdir(os.path.join(state_dir, "frontier_sched")) == [f"epoch={epochs}"]
-    assert [n for n in names if n.startswith("bloom_epoch")] == [f"bloom_epoch{epochs}.npy"]
+    assert not [n for n in names if n.startswith("bloom_epoch")]
+    prefilter = os.listdir(os.path.join(state_dir, "prefilter"))
+    assert len([n for n in prefilter if n.startswith("gen")]) == 1, prefilter
     assert not [n for n in names if n.startswith("_") and n.endswith(".gen")]
 
 

@@ -21,7 +21,7 @@ import sys
 
 import numpy as np
 import pandas as pd
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -107,28 +107,19 @@ def naive_cdc(
     ]
 
     cuts: list[int] = []
-
-    def add_cut(c: int) -> None:
-        prev = cuts[-1] if cuts else 0
-        if c - prev < min_len and cuts:
-            cuts[-1] = c  # merge sub-min remainder into the previous chunk
-        else:
-            cuts.append(c)
-
     start = 0
-    for c in cut_after:
+    for c in [*cut_after, n]:
         if c - start < min_len:
-            continue
-        while c - start > max_len:
-            add_cut(start + max_len)
+            if c < n or start == n:
+                continue
+            if cuts:  # a short end-of-doc tail rejoins the previous chunk
+                cuts.pop()
+                start = cuts[-1] if cuts else 0
+        while c - start >= max_len + min_len:  # clamp, never leaving < min_len
             start += max_len
-        add_cut(c)
+            cuts.append(start)
+        cuts.append(c)
         start = c
-    while n - start > max_len:
-        add_cut(start + max_len)
-        start += max_len
-    if n > start:
-        add_cut(n)
     spans = list(zip([0] + cuts[:-1], cuts))
     return [poly(s, e) >> 1 for s, e in spans], spans
 
@@ -208,6 +199,13 @@ def test_cdc_vectorized_matches_naive(data, p):
 
 @settings(max_examples=75, deadline=None)
 @given(st.binary(min_size=1, max_size=1500), cdc_params)
+# a max_len clamp, a merged sub-min_len remainder, then a short end-of-doc
+# tail: once gave the 19-byte chunk (4, 23) against the bound of 18
+@example(
+    b"\x00\x00\x01\x01\x00\x00\x00\x01\x00\x00\x00\x01"
+    b"\x00\x00\x00\x01\x00\x00\x00\x01\x01\x00\x00",
+    {"window": 4, "mask_bits": 1, "min_len": 3, "max_len": 16},
+)
 def test_cdc_span_invariants(data, p):
     """Chunk spans partition the document; with the remainder-merge rule
     (ADVICE r03 #4) every chunk is >= min_len (unless the whole doc is

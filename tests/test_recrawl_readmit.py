@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql.readwriter import DataFrameWriter
 
 from link_profiler_repo_spark.config import CrawlConfig
+from link_profiler_repo_spark.operators import crawl
 from link_profiler_repo_spark.operators.crawl import CrawlEngine
 from link_profiler_repo_spark.operators.recrawl import change_rates, recrawl_schedule
 from link_profiler_repo_spark.oracle_sim import build_fixture, simulate_bfs
@@ -24,12 +25,19 @@ from link_profiler_repo_spark.synth import SynthParams, synth_docs_spark
 P = SynthParams(n_docs=100, n_hosts=6)
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _eight_buckets():
+    """Every engine here splits its 2^16 prefilter bits into 8 buckets."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(crawl, "PREFILTER_BUCKET_BITS", 1 << 13)
+        yield
+
+
 def _run_engine(spark, wd, docs_df, max_pages=400):
     cfg = CrawlConfig(job_id="readmit", max_depth=3, max_pages=max_pages)
     return CrawlEngine(
         spark, cfg, docs_df, wd, synth_params=P,
-        prefilter="cuckoo", bloom_buckets=8,
-        bloom_bits=1 << 16, metrics_enabled=False,
+        prefilter="cuckoo", bloom_bits=1 << 16, metrics_enabled=False,
     )
 
 

@@ -243,3 +243,53 @@ def test_fresh_run_ignores_prior_state(spark, tmp_path):
     assert first == second
     assert {u for _, u in first} == expected.seen
     docs_df.unpersist()
+
+
+def test_resume_rejects_another_prefilter_layout(spark, tmp_path):
+    """The prefilter holds the keys of every page crawled before the
+    checkpoint. Resuming under another layout would let those pages skip the
+    exact anti-join and be crawled again, so resume refuses and names both
+    layouts. That includes a checkpoint that records no layout. The refused
+    resume leaves the checkpoint as it was."""
+    import json
+    import os
+
+    p = SynthParams(n_docs=100, n_hosts=6)
+    cfg = CrawlConfig(job_id="layout", max_depth=8, max_pages=400)
+    _, seeds = build_fixture(p, n_seeds=2)
+    docs_df = synth_docs_spark(spark, p)
+
+    def engine(prefilter):
+        return CrawlEngine(
+            spark, cfg, docs_df, str(tmp_path), synth_params=p, prefilter=prefilter,
+            bloom_bits=1 << 16, metrics_enabled=False,
+        )
+
+    eng = engine(None)
+    commit = eng.store.commit
+
+    def pause_after_epoch_1(meta):
+        commit(meta)
+        if meta["epoch"] == 1:
+            eng.store.write_control("paused")
+
+    eng.store.commit = pause_after_epoch_1
+    eng.run_bfs(seeds)
+    assert (eng.stats.stopped, eng.stats.epochs) == ("paused", 1)
+    ckpt_path = os.path.join(eng.store.dir, "_checkpoint.json")
+    with open(ckpt_path) as f:
+        saved = f.read()
+
+    for prefilter in ("bloom", "cuckoo"):
+        layout = f"{prefilter}, 65536 bits, n_buckets=1"
+        with pytest.raises(ValueError, match=f"'none' differs from this engine's '{layout}'"):
+            engine(prefilter).run_bfs(seeds, resume=True)
+    with open(ckpt_path) as f:
+        assert f.read() == saved
+
+    unrecorded = json.loads(saved)
+    del unrecorded["prefilter"]
+    with open(ckpt_path, "w") as f:
+        json.dump(unrecorded, f)
+    with pytest.raises(ValueError, match="'unrecorded' differs from this engine's 'none'"):
+        engine(None).run_bfs(seeds, resume=True)

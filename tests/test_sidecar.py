@@ -2,17 +2,21 @@
 checked for both kernels: no false negatives with a per-kernel false
 positive bound, bucket-pruned probe reads, untouched buckets carried over,
 non-power-of-two bucket counts, one state row per bucket however many
-updates fold in, no key lost to a crash at any commit step of an update, and
-end-to-end crawl oracle equality with the prefilter active."""
+updates fold in, no key lost to a crash at any commit step of an update, a
+one-bucket probe without an exchange, the engine's bucket count from its bit
+budget, and end-to-end crawl oracle equality with the prefilter active."""
 
 import os
 import shutil
 import tempfile
 
+import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from link_profiler_repo_spark.functions.sidecar import Sidecar
+from link_profiler_repo_spark.functions.sidecar import Sidecar, _positions
+from link_profiler_repo_spark.operators import crawl
+from link_profiler_repo_spark.plans.inspect import count_exchanges
 
 N_BUCKETS = 8
 # whole-filter bit budgets: 2^12 bits per Bloom bucket, 2^12 cuckoo slots
@@ -39,6 +43,15 @@ def _false_negatives(spark, sc, hi):
 def _rows_per_bucket(spark, sc):
     rows = spark.read.parquet(sc.live()).groupBy("bucket").count().collect()
     return {r["bucket"]: r["count"] for r in rows}
+
+
+def test_positions_distinct_beyond_six_probes():
+    """k > 6 must NOT reuse multipliers (reuse silently degrades the filter
+    to k=6): probe positions for i=6,7 differ from i=0,1 on random keys."""
+    h = np.random.default_rng(7).integers(0, 2**63, size=1000, dtype=np.int64).view(np.uint64)
+    pos = _positions(h, 1 << 16, 8)
+    assert not np.array_equal(pos[6], pos[0])
+    assert not np.array_equal(pos[7], pos[1])
 
 
 @kernels
@@ -155,8 +168,31 @@ def test_crash_at_any_commit_step_loses_no_key(spark, tmp_path, monkeypatch, ker
         assert not lost, f"crash at commit step {at}/{n_steps}: {len(lost)} false negatives"
 
 
-@pytest.mark.parametrize("prefilter", ["sidecar", "cuckoo"])
-def test_bfs_matches_oracle(spark, prefilter):
+@kernels
+def test_one_bucket_probe_has_no_exchange(spark, tmp_path, kernel):
+    """With one bucket every task loads it in place: the probe plan adds no
+    Exchange (two buckets still route keys to their bucket's task), and
+    every member is found."""
+    sc = _sidecar(tmp_path, kernel, n_buckets=1)
+    keys = _keys(spark, 0, 1000)
+    sc.update(keys)
+    assert count_exchanges(sc.probe(keys)) == 0
+    assert _false_negatives(spark, sc, 1000) == 0
+    assert count_exchanges(_sidecar(tmp_path / "two", kernel, n_buckets=2).probe(keys)) > 0
+
+
+def test_engine_buckets_from_bloom_bits(tmp_path):
+    """The engine splits bloom_bits into PREFILTER_BUCKET_BITS-sized buckets
+    (rounded up): bench and test budgets get one bucket."""
+    from link_profiler_repo_spark.config import CrawlConfig
+
+    for bits, n in ((1 << 16, 1), (1 << 23, 1), (1 << 25, 1), ((1 << 25) + 8, 2), (1 << 30, 32)):
+        eng = crawl.CrawlEngine(None, CrawlConfig(), None, str(tmp_path), bloom_bits=bits)
+        assert eng._sidecar.n_buckets == n, bits
+
+
+@kernels
+def test_bfs_matches_oracle(spark, monkeypatch, kernel):
     """End-to-end: crawl order and seen set equal the simulator with the
     bucketed prefilter on. Six buckets of a 2^16-bit budget do not divide
     into whole bytes, so the Bloom bucket size must round; after the crawl
@@ -166,16 +202,18 @@ def test_bfs_matches_oracle(spark, prefilter):
     from link_profiler_repo_spark.oracle_sim import build_fixture, simulate_bfs
     from link_profiler_repo_spark.synth import SynthParams, synth_docs_spark
 
+    monkeypatch.setattr(crawl, "PREFILTER_BUCKET_BITS", 11_000)  # ceil(2^16 / 11000) = 6
     p = SynthParams(n_docs=100, n_hosts=6)
-    cfg = CrawlConfig(job_id=f"{prefilter}-bfs", max_depth=3, max_pages=300)
+    cfg = CrawlConfig(job_id=f"{kernel}-bfs", max_depth=3, max_pages=300)
     docs, seeds = build_fixture(p, n_seeds=2)
     expected = simulate_bfs(docs, seeds, cfg, p)
     docs_df = synth_docs_spark(spark, p).persist()
     docs_df.count()
     eng = CrawlEngine(
         spark, cfg, docs_df, tempfile.mkdtemp(), synth_params=p,
-        prefilter=prefilter, bloom_buckets=6, bloom_bits=1 << 16, metrics_enabled=False,
+        prefilter=kernel, bloom_bits=1 << 16, metrics_enabled=False,
     )
+    assert eng._sidecar.n_buckets == 6
     out = eng.run_bfs(seeds)
     got = [
         (int(r["crawl_order"]), r["url"], int(r["depth"]))
@@ -187,9 +225,14 @@ def test_bfs_matches_oracle(spark, prefilter):
     docs_df.unpersist()
 
 
-def test_unknown_prefilter_rejected(spark):
+def test_unknown_prefilter_rejected(spark, tmp_path):
+    """Only None, 'bloom' and 'cuckoo' construct; the removed single-bitmap
+    value and the old name of the Bloom table fail before any state exists."""
     from link_profiler_repo_spark.config import CrawlConfig
     from link_profiler_repo_spark.operators.crawl import CrawlEngine
 
-    with pytest.raises(ValueError, match="prefilter='bucketed'"):
-        CrawlEngine(spark, CrawlConfig(), None, tempfile.mkdtemp(), prefilter="bucketed")
+    for value in ("bucketed", "single", "sidecar"):
+        wd = tmp_path / value
+        with pytest.raises(ValueError, match=f"prefilter='{value}'"):
+            CrawlEngine(spark, CrawlConfig(), None, str(wd), prefilter=value)
+        assert not wd.exists()
